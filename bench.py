@@ -53,6 +53,27 @@ CORE_SET = (
 )
 
 
+# Extended section (VERDICT r08 item 7): cheap representatives of the
+# session-3/4 families (graph, linkage, conformal) the frozen core-set
+# predates, so driver benches can catch regressions in those code paths.
+# Reported SEPARATELY (queries_ext / ext_total) — the frozen core and the
+# main headline set stay membership-stable and round-over-round
+# comparable. Also the default extension set of tools/profile_phases.py
+# and tools/capture_plans.py.
+EXT_SET = (
+    "textrank_keywords",
+    "linkage_blocking_recall_report",
+    "conformal_threshold_report",
+    # r10 continuation families (skyline / changepoint / basket /
+    # attribution) — cheap at both SFs, so the new code paths are
+    # regression-visible without touching the frozen core
+    "pareto_frontier_parts",
+    "changepoint_revenue",
+    "association_rules_report",
+    "attribution_report",
+)
+
+
 def _core_total(timings: dict[str, float]) -> float:
     return round(sum(timings[n] for n in CORE_SET if n in timings), 3)
 
@@ -91,24 +112,6 @@ def main() -> None:
 
     timings = _noop_best_of_2(spark, bench_queries, sf_dir)
 
-    # Extended section (VERDICT r08 item 7): cheap representatives of
-    # the session-3/4 families (graph, linkage, conformal) the frozen
-    # core-set predates, so driver benches can catch regressions in
-    # those code paths. Reported SEPARATELY (queries_ext / ext_total) —
-    # the frozen core and the main headline set stay membership-stable
-    # and round-over-round comparable.
-    EXT_SET = (
-        "textrank_keywords",
-        "linkage_blocking_recall_report",
-        "conformal_threshold_report",
-        # r10 continuation families (skyline / changepoint / basket /
-        # attribution) — cheap at both SFs, so the new code paths are
-        # regression-visible without touching the frozen core
-        "pareto_frontier_parts",
-        "changepoint_revenue",
-        "association_rules_report",
-        "attribution_report",
-    )
     ext_queries = {n: REGISTRY[n] for n in EXT_SET if n in REGISTRY}
 
     # Old count()-based method, kept for comparability with BENCH_r01

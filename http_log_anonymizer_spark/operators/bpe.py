@@ -16,7 +16,7 @@ expressed as a DataFrame aggregation:
   the merge application is a pure array fold per word (greedy
   left-to-right, matching the reference implementation) — zero shuffle.
 - Driver state per iteration is ONE (left, right, count) row; the vocab
-  stays distributed, lineage truncated per round via localCheckpoint.
+  stays distributed, lineage truncated per round via pin().
 
 The iteration is driver-coordinated but every step is deterministic
 (exact integer counts, lexicographic tie-breaks, greedy integer/string
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+from http_log_anonymizer_spark.operators.materialize import pin
 
 
 def _merge_adjacent(sym: F.Column, left: str, right: str) -> F.Column:
@@ -152,7 +154,7 @@ def learn_bpe_merges(vocab: DataFrame, k: int) -> list[Row]:
     (word, freq, sym) vocabulary. Stops early when no adjacent pair
     remains. Ties break deterministically: highest count, then
     lexicographic (left, right)."""
-    v = vocab.select("freq", "sym").localCheckpoint()
+    v = pin(vocab.select("freq", "sym"))
     merges: list[Row] = []
     for step in range(k):
         pairs = (
@@ -181,7 +183,9 @@ def learn_bpe_merges(vocab: DataFrame, k: int) -> list[Row]:
         merges.append(
             Row(step=step, left=best["l"], right=best["r"], pair_count=int(best["c"]))
         )
-        v = v.select(
-            "freq", _merge_adjacent(F.col("sym"), best["l"], best["r"]).alias("sym")
-        ).localCheckpoint()
+        v = pin(
+            v.select(
+                "freq", _merge_adjacent(F.col("sym"), best["l"], best["r"]).alias("sym")
+            )
+        )
     return merges

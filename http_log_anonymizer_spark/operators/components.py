@@ -17,13 +17,15 @@ large-star/small-star algorithm (Kiveris et al., "Connected Components
 in MapReduce and Beyond", SoCC'14) — same groupBy+join-per-round shape,
 provably O(log^2 n) rounds, so a path graph that takes min-label
 propagation O(n) rounds collapses in a handful. Lineage is truncated
-every round via localCheckpoint so plans don't grow unboundedly.
+every round via pin() so plans don't grow unboundedly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from http_log_anonymizer_spark.operators.materialize import pin
 
 
 def connected_components(
@@ -48,15 +50,13 @@ def connected_components(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("cluster").alias("nb_min"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
+        new_labels = pin(  # truncate lineage each round
+            labels.join(neighbor_min, "node", "left").select(
                 "node",
                 F.least(F.col("cluster"), F.coalesce(F.col("nb_min"), F.col("cluster"))).alias(
                     "cluster"
                 ),
             )
-            .localCheckpoint()  # truncate lineage each round
         )
         changed = (
             new_labels.alias("n")
@@ -123,11 +123,10 @@ def connected_components_star(
     repeats — a collision would need two distinct edge sets agreeing
     on both, p < 2^-40 per round; max_iter still backstops.
     """
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
     nodes = (
         e.select(F.col("a").alias("node"))
@@ -148,7 +147,7 @@ def connected_components_star(
 
     prev = None
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        e = pin(_small_star(_large_star(e)))
         sig = _sig(e)
         if sig == prev:
             break

@@ -21,11 +21,9 @@ blocked-GEMM tradeoff, served by the storage layer in parallel rather
 than by the driver serially. For corpora where even one pass per shard
 is too slow, prune candidates with LSH first (plans/similarity.py).
 
-``scratch_dir`` must be readable by executors (any shared filesystem on
-a cluster; the default system temp dir is correct for local mode).
-Shard materialization, reuse across repeated runs (``cache_key``), and
-exit-time cleanup live in operators/side_input.py (ADVICE r03: scratch
-dirs were leaked per call and caller dirs were overwritten).
+Shard materialization and reuse across repeated runs (``cache_key``)
+live in operators/side_input.py; where the shards are written is
+operators/materialize.py's scratch rule.
 
 Results are BIT-IDENTICAL to the fold-based path (r10: pairs are
 prefiltered with a float32 GEMM under a provably covering margin, then
@@ -70,7 +68,6 @@ def gemm_neardup_pairs(
     units: DataFrame,
     threshold: float,
     shard_bytes: int = _DEFAULT_SHARD_BYTES,
-    scratch_dir: str | None = None,
     cache_key: str | None = None,
 ) -> DataFrame:
     """All-pairs cosine >= threshold over a (vec_id, ue) unit-vector
@@ -79,10 +76,8 @@ def gemm_neardup_pairs(
 
     A pair lands in exactly one shard's output (the shard owning
     vec_b), so no distinct is needed. Shard files are managed by
-    operators/side_input.py: fresh temp roots are removed at process
-    exit, ``cache_key`` reuses a prior materialization of the same
-    input, and a caller-supplied ``scratch_dir`` gets a fresh
-    subdirectory (its contents are never clobbered).
+    operators/side_input.py; ``cache_key`` reuses a prior
+    materialization of the same input.
     """
     spark = units.sparkSession
     # Cheap stats: count() prunes the unit-vector projection entirely
@@ -103,7 +98,6 @@ def gemm_neardup_pairs(
         n,
         dim,
         shard_bytes=shard_bytes,
-        scratch_dir=scratch_dir,
         cache_key=cache_key,
     )
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from http_log_anonymizer_spark.operators.materialize import pin
+
 ASSIGN_SCHEMA = StructType(
     [StructField("vec_id", LongType()), StructField("cluster", IntegerType())]
 )
@@ -80,7 +82,7 @@ def kmeans(
                     }
                 )
 
-        assignments = data.mapInPandas(assign, ASSIGN_SCHEMA).localCheckpoint()
+        assignments = pin(data.mapInPandas(assign, ASSIGN_SCHEMA))
 
         # update step: per-cluster component sums via one partial-agg pass
         joined = data.join(assignments, "vec_id")
@@ -142,23 +144,25 @@ def kmeans_quantized(
     - exactly ``rounds`` update steps, NO data-dependent early stop
       (convergence checks diverge between engines near fixpoints).
 
-    Scale shape: the quantized corpus materializes once (eager local
-    checkpoint); per round, assignment is a whole-stage-codegen
-    expression over k literal centroid arrays (argmin via array_min of
-    (d2, cluster) structs — no shuffle, no Python), and the update is
-    one groupBy(cluster, pos) whose partial aggregation collapses each
+    Scale shape: the quantized corpus is pinned once; per round,
+    assignment is a whole-stage-codegen expression over k literal
+    centroid arrays (argmin via array_min of (d2, cluster) structs —
+    no shuffle, no Python), and the update is one groupBy(cluster,
+    pos) whose partial aggregation collapses each
     partition to k*dim rows before the shuffle; only k*dim (sum, n)
     pairs ever reach the driver. Identical per-round cost to the
     mapInPandas :func:`kmeans` above, minus the Arrow crossings.
     """
     spark_qscale = float(qscale)
-    qv = df.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * qscale).cast("long"),
-        ).alias("qv"),
-    ).localCheckpoint(eager=True)
+    qv = pin(
+        df.select(
+            "vec_id",
+            F.transform(
+                F.col("embedding").cast("array<double>"),
+                lambda x: F.floor(x * qscale).cast("long"),
+            ).alias("qv"),
+        )
+    )
 
     seed_rows = (
         qv.withColumn(
@@ -271,17 +275,17 @@ def kmeans_quantized_table(
     """
     spark = df.sparkSession
     spark_qscale = float(qscale)
-    qv = df.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * qscale).cast("long"),
-        ).alias("qv"),
-    ).localCheckpoint(eager=True)
-
-    qv_t = qv if train_filter is None else qv.filter(train_filter).localCheckpoint(
-        eager=True
+    qv = pin(
+        df.select(
+            "vec_id",
+            F.transform(
+                F.col("embedding").cast("array<double>"),
+                lambda x: F.floor(x * qscale).cast("long"),
+            ).alias("qv"),
+        )
     )
+
+    qv_t = qv if train_filter is None else pin(qv.filter(train_filter))
     seed_rows = (
         qv_t.withColumn(
             "h",
@@ -389,7 +393,7 @@ def kmeans_quantized_multi(
     one per ``dsub``-dim slice of ``vec_col`` — in ONE fused pass per
     round (r10 optimization, guide §2.4/§5). The PQ tiers previously
     trained their {n_sub} subspace codebooks sequentially: each slice
-    paid its own eager checkpoint, seed collect, per-round
+    paid its own pin, seed collect, per-round
     partial+collect jobs, and a final assignment that had to be joined
     back on vec_id ({n_sub} joins). All of that is loop-invariant
     across subspaces:
@@ -418,18 +422,18 @@ def kmeans_quantized_multi(
     spark_qscale = float(qscale)
     extra = tuple(extra)
     extra_fields = [df.schema[c] for c in extra]
-    qv = df.select(
-        "vec_id",
-        *extra,
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.floor(x * qscale).cast("long"),
-        ).alias("qv"),
-    ).localCheckpoint(eager=True)
-
-    qv_t = qv if train_filter is None else qv.filter(train_filter).localCheckpoint(
-        eager=True
+    qv = pin(
+        df.select(
+            "vec_id",
+            *extra,
+            F.transform(
+                F.col(vec_col).cast("array<double>"),
+                lambda x: F.floor(x * qscale).cast("long"),
+            ).alias("qv"),
+        )
     )
+
+    qv_t = qv if train_filter is None else pin(qv.filter(train_filter))
     seed_rows = (
         qv_t.withColumn(
             "h",

@@ -11,13 +11,12 @@ every kernel task streams shard files straight from storage: driver
 memory stays O(1) and peak task memory is one Arrow batch plus one
 shard.
 
-Lifecycle (ADVICE r03): scratch directories created here are tracked
-and removed at interpreter exit, and repeated materializations of the
-SAME logical input within one process reuse the first write via
-``cache_key`` — so a bench's best-of-2 + count passes pay the shuffle
-once and /tmp does not accumulate corpus-sized copies. A caller-managed
-``scratch_dir`` is never overwritten: each materialization lands in a
-fresh subdirectory.
+Lifecycle: shards are written to a fresh path under the process's
+scratch root (operators/materialize.py, removed at exit), and repeated
+materializations of the SAME logical input within one process reuse
+the first write via ``cache_key`` — so a bench's best-of-2 + count
+passes pay the shuffle once and scratch does not accumulate
+corpus-sized copies.
 
 ``cache_key`` contract: keys must uniquely identify the input *within
 this process* (callers embed the source path and row count). Reuse is
@@ -27,28 +26,16 @@ tables (the bench/test contract) can never serve stale shards.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-import uuid
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from http_log_anonymizer_spark.operators.materialize import scratch_path
 
 DEFAULT_SHARD_BYTES = 128 << 20
 
 # cache_key -> (root_dir, n_shards); in-process only (see module doc).
 _CACHE: dict[str, tuple[str, int]] = {}
-_OWNED_DIRS: list[str] = []
-
-
-def _cleanup() -> None:
-    for d in _OWNED_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup)
 
 
 def shard_vectors(
@@ -59,7 +46,6 @@ def shard_vectors(
     vec_col: str = "ue",
     extra: list[str] | None = None,
     shard_bytes: int = DEFAULT_SHARD_BYTES,
-    scratch_dir: str | None = None,
     cache_key: str | None = None,
 ) -> tuple[str, int]:
     """Materialize ``df`` as hash-sharded parquet readable by executors;
@@ -67,22 +53,14 @@ def shard_vectors(
     ``pmod(hash(key_col), n_shards) == k`` as the single file
     ``root/_shard=k`` — deterministic assignment, each row in exactly
     one shard, each shard at most ~``shard_bytes`` of vector data.
-
-    ``scratch_dir`` must be executor-readable (any shared filesystem on
-    a cluster; the system temp dir is correct for local mode). Fresh
-    temp roots are removed at process exit; ``cache_key`` reuses an
-    existing materialization of the same input within this process.
+    ``cache_key`` reuses an existing materialization of the same input
+    within this process.
     """
     if cache_key is not None and cache_key in _CACHE:
         return _CACHE[cache_key]
     rows_per_shard = max(1, shard_bytes // (dim * 8))
     n_shards = max(1, -(-n // rows_per_shard))
-    if scratch_dir is None:
-        root = tempfile.mkdtemp(prefix="graft_side_")
-        _OWNED_DIRS.append(root)
-    else:
-        # never overwrite caller-owned contents (ADVICE r03)
-        root = f"{scratch_dir.rstrip('/')}/side-{uuid.uuid4().hex[:12]}"
+    root = scratch_path(df.sparkSession, "side-")
     cols = [key_col, F.col(vec_col).cast("array<double>").alias(vec_col)]
     cols += list(extra or [])
     (

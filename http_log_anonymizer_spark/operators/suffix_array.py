@@ -43,110 +43,10 @@ offset arrays.
 
 from __future__ import annotations
 
-import atexit
-import os
-import posixpath
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_OWNED_DIRS: list[str] = []
-
-
-def _cleanup() -> None:
-    for d in _OWNED_DIRS:
-        _rm_scratch(d)
-
-
-atexit.register(_cleanup)
-
-
-def _rm_scratch(path: str) -> None:
-    """Delete a scratch dir on the filesystem that owns it (local or,
-    for URI roots, whatever pyarrow.fs resolves — HDFS/S3)."""
-    if "://" in path:
-        try:
-            from pyarrow import fs as pafs
-
-            f, p = pafs.FileSystem.from_uri(path)
-            f.delete_dir(p)
-        except Exception:  # noqa: BLE001 — best-effort atexit cleanup
-            pass
-    else:
-        shutil.rmtree(path, ignore_errors=True)
-
-
-def pin(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` to scratch parquet and read it back — the
-    iteration-chain truncator for this module's doubling loops.
-
-    Why not checkpoint: on Spark 4.1.2 (measured, see
-    tests/test_suffix_array.py::test_pin_breaks_quadratic_chains) a
-    chain of self-joins where each level is ``localCheckpoint()``-ed —
-    or reliably ``checkpoint()``-ed, or ``cache()+count()``-ed — over a
-    base plan from this module re-executes DOUBLING work per level
-    (0.3, 0.5, 1.1, 2.7, 7.4, 19.9, 56.9 s ... at a CONSTANT 28k rows
-    per level, ending in a driver OOM building plan strings), even
-    though the optimized plan is a 35-char LogicalRDD scan and row
-    counts shrink. A parquet round-trip is flat (~0.3 s/level): the
-    written files are a hard lineage boundary nothing can re-execute
-    through.
-
-    Scratch location: ``spark.graft.scratchDir`` (Spark conf) or
-    ``$SPARK_GRAFT_SCRATCH_DIR``, else a driver-local temp dir. On a
-    MULTI-NODE cluster the configured root MUST be executor-shared
-    storage (HDFS/S3/NFS — ADVICE r05: a driver-local temp dir is only
-    correct in local mode, since executors read the files back);
-    production index builds persist their rounds to shared storage
-    anyway. Scratch dirs are per-process unique and atexit-removed."""
-    spark = df.sparkSession
-    conf_root = spark.conf.get("spark.graft.scratchDir", None) or os.environ.get(
-        "SPARK_GRAFT_SCRATCH_DIR"
-    )
-    if conf_root:
-        root = posixpath.join(conf_root.rstrip("/"), f"graft_sa_{uuid.uuid4().hex[:8]}")
-        if "://" not in root:
-            os.makedirs(root, exist_ok=True)
-    else:
-        root = tempfile.mkdtemp(prefix="graft_sa_")
-    _OWNED_DIRS.append(root)
-    path = f"{root}/{uuid.uuid4().hex[:8]}"
-    # Scratch row groups are capped at 32 MiB (default 128 MiB): pin
-    # files are written once and scanned sequentially, so big row
-    # groups buy nothing, while every concurrent writer task buffers
-    # up to one row group on heap and the read-back path allocates
-    # column-chunk-sized buffers — at sf100 the default produced the
-    # 128 MB G1 humongous allocations that GC-choked hits_copurchase
-    # (SCALE.md r09/r10; 32 tasks x 128 MiB ~ 4 GiB of buffer churn in
-    # an 8 GiB heap).
-    df.write.option("parquet.block.size", 32 * 1024 * 1024).mode(
-        "overwrite"
-    ).parquet(path)
-    out = spark.read.parquet(path)
-    out._graft_pin_path = path  # noqa: SLF001 — consumed by pin_counted
-    return out
-
-
-def pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """:func:`pin` plus the pinned row count, read from the written
-    parquet FOOTERS driver-side (pyarrow) — zero extra Spark jobs,
-    where a ``.count()`` between the sequential doubling rounds would
-    be one more synchronous round-trip. Only used for driver-local /
-    mounted scratch roots; URI scratch falls back to one count job."""
-    out = pin(df)
-    path = out._graft_pin_path  # noqa: SLF001
-    if "://" in path:
-        return out, out.count()
-    import pyarrow.parquet as pq
-
-    n = 0
-    for name in os.listdir(path):
-        if name.endswith(".parquet"):
-            n += pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
-    return out, n
+from http_log_anonymizer_spark.operators.materialize import pin
 
 
 def _range_parts(df: DataFrame) -> int:
@@ -202,12 +102,10 @@ def ranked(df: DataFrame, cols: list[str], out: str = "r") -> DataFrame:
         .repartitionByRange(_range_parts(df), *[F.col(c) for c in cols])
         .withColumn("_pid", F.spark_partition_id())
     )
-    # pin to scratch parquet: stabilizes the sampled range boundaries
-    # across the consuming subplans (an unpinned range exchange would
-    # re-sample per consumer — offsets from one sampling, _pids from
-    # another, silently wrong ranks) AND keeps 10^7-row intermediates
-    # off the JVM heap (localCheckpoint pins deserialized blocks in the
-    # block manager — measured Java-heap OOM at N=27M on the default 8g)
+    # pinned: stabilizes the sampled range boundaries across the
+    # consuming subplans (an unpinned range exchange would re-sample
+    # per consumer — offsets from one sampling, _pids from another,
+    # silently wrong ranks)
     d = pin(d)
     return _two_level_rank(d, cols, out)
 
@@ -298,7 +196,7 @@ def cumsum_by_range(
             df.repartitionByRange(_range_parts(df), F.col(order_col))
             .withColumn("_pid", F.spark_partition_id())
         )
-    d = pin(d)  # same off-heap pin as ranked()
+    d = pin(d)  # same pin as ranked()
     totals = d.groupBy("_pid").agg(F.sum(val_col).alias("t"))
     offs = _partition_offsets(totals, "t", "_off").select(
         "_pid", F.coalesce("_off", F.lit(0)).alias("_off")
@@ -520,7 +418,7 @@ def prefix_max_by_range(
         df.repartitionByRange(_range_parts(df), F.col(order_col))
         .withColumn("_pid", F.spark_partition_id())
     )
-    d = pin(d)  # same off-heap pin as ranked()
+    d = pin(d)  # same pin as ranked()
     maxes = d.groupBy("_pid").agg(F.max(val_col).alias("m"))
     wprev = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = maxes.select(

@@ -60,6 +60,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from http_log_anonymizer_spark.operators.materialize import pin
+
 _SEP = "\x1f"
 
 MAX_WORD = 12  # analysed-word length cap (positions in the DP)
@@ -181,7 +183,7 @@ def train_unigram(tokens: DataFrame, rounds: int = 2) -> DataFrame:
     """``rounds`` EM rounds over the whitespace-token stream; returns
     the final piece count table (piece, cnt)."""
     vocab = word_vocab(tokens)
-    sp = spans(vocab).localCheckpoint(eager=True)
+    sp = pin(spans(vocab))
     counts = seed_counts(sp)
     for _ in range(rounds):
         counts = usage_counts(segment_round(sp, counts))
@@ -303,7 +305,7 @@ def segment_lengths(tokens: DataFrame, rounds: int = 2) -> DataFrame:
     ``rounds`` EM rounds — the Spark twin of :func:`unigram_encode_sql`
     (one extra E-step with the final counts)."""
     vocab = word_vocab(tokens)
-    sp = spans(vocab).localCheckpoint(eager=True)
+    sp = pin(spans(vocab))
     counts = seed_counts(sp)
     for _ in range(rounds):
         counts = usage_counts(segment_round(sp, counts))
@@ -340,7 +342,7 @@ def greedy_segment_stats(
     the jump table is built by a vocab equi-join on the span table,
     which is the only corpus-vocabulary-sized work."""
     vocab = word_vocab(tokens)
-    sp = spans(vocab).localCheckpoint(eager=True)
+    sp = pin(spans(vocab))
     counts = seed_counts(sp)
     for _ in range(rounds):
         counts = usage_counts(segment_round(sp, counts))

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from http_log_anonymizer_spark.operators.bpe import _merge_adjacent
+from http_log_anonymizer_spark.operators.materialize import pin
 
 SCALE = 10**9
 
@@ -102,7 +103,7 @@ def learn_wordpiece_merges(vocab: DataFrame, k: int) -> list[Row]:
     :func:`operators.bpe.corpus_vocab`). Stops early when no adjacent
     pair remains. Argmax: score desc, then lexicographic (left,
     right)."""
-    v = vocab.select("freq", "sym").localCheckpoint()
+    v = pin(vocab.select("freq", "sym"))
     merges: list[Row] = []
     for step in range(k):
         top = _scored_pairs(v).orderBy(F.col("score").desc(), "l", "r").take(1)
@@ -118,9 +119,11 @@ def learn_wordpiece_merges(vocab: DataFrame, k: int) -> list[Row]:
                 score=int(best["score"]),
             )
         )
-        v = v.select(
-            "freq", _merge_adjacent(F.col("sym"), best["l"], best["r"]).alias("sym")
-        ).localCheckpoint()
+        v = pin(
+            v.select(
+                "freq", _merge_adjacent(F.col("sym"), best["l"], best["r"]).alias("sym")
+            )
+        )
     return merges
 
 

@@ -97,7 +97,7 @@ _WINDOW = [
     "minhash_estimator_error_report",
     "hard_negative_mining",
     "revenue_concentration_report",
-    # --- 33 of the 43 r05-stale queries (rule 3) ---
+    # --- 20 of the 43 r05-stale queries (rule 3) ---
     "data_quality_report",
     "dedup_clusters",
     "dedup_exact",

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.registry import register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -84,7 +85,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
 SELECT
   l.l_orderkey,
-  round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+  CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(15,2))
+    * (1 - CAST(l.l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue,
   o.o_orderdate,
   o.o_orderpriority
 FROM customer c
@@ -103,7 +105,9 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 analog: selective dim filter + two joins + grouped
     revenue + deterministic top-10 (ties broken by orderkey). The
     filtered customer side broadcasts; lineitem never shuffles for the
-    join, only for the final (small) aggregation."""
+    join, only for the final (small) aggregation. Revenue is summed as
+    an exact DECIMAL in both engines: a double sum depends on the
+    summation order and can land either side of a half-cent tie."""
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
@@ -111,15 +115,13 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1996-03-15").cast("timestamp")
     )
+    price = F.col("l_extendedprice").cast("decimal(15,2)")
+    disc = F.col("l_discount").cast("decimal(15,2)")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
+        .agg(F.round(F.sum(price * (1 - disc)), 2).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
     )
@@ -2590,12 +2592,8 @@ def kmv_cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("t"),
         hash64(F.col("user_id").cast("string")).alias("h"),
     ).distinct()
-    # eager local checkpoint, not cache(): same one-pass materialization
-    # for the four consumers below, but lineage-free blocks the context
-    # cleaner reclaims once the plan is unreferenced — a plain cache
-    # would stay pinned in the cache manager for the whole session
-    # (ADVICE r02).
-    u = u.localCheckpoint(eager=True)
+    # one pass for the four consumers below
+    u = pin(u)
 
     wt = Window.partitionBy("t").orderBy("h")
     syn = u.select("t", "h", F.row_number().over(wt).alias("rk")).filter(
@@ -3139,10 +3137,8 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No explicit materialization: the edge subtree repeats once per
     # iteration, and Spark serves every repeat from the SAME shuffle
     # files via ReusedExchange (plan-asserted) — disk-backed and
-    # per-executor on a cluster. An earlier localCheckpoint variant
-    # pinned |E| deserialized rows in block-manager memory and OOM'd a
-    # 28 GB local heap at sf10 (240M edges); exchange reuse costs
-    # nothing and is memory-oblivious.
+    # per-executor on a cluster; exchange reuse costs nothing and is
+    # memory-oblivious.
     edges = (
         li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.dst))
         .groupBy(F.col("l_partkey").alias("src"), "dst")
@@ -3397,8 +3393,8 @@ def hits_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly like the L2 norm for ranking purposes but engine-exact
     (truncating division of non-negative integers).
 
-    Scale shape: the edge table (customer, part, weight) materializes
-    ONCE to scratch parquet (operators/suffix_array.pin — each
+    Scale shape: the edge table (customer, part, weight) is pinned
+    ONCE (operators/materialize.pin — each
     normalization is an aggregate over the previous half-step, so a
     lazy chain would re-execute every earlier round: the
     record_linkage_em lesson), and node-sized score states pin per
@@ -3408,8 +3404,6 @@ def hits_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row max broadcast back — nothing visits the driver. Nodes
     outside the purchase relation carry no score, the HITS convention
     on the induced subgraph."""
-    from http_log_anonymizer_spark.operators.suffix_array import pin
-
     s = _HITS_SCALE
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -3543,7 +3537,7 @@ def triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     report."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = (
+    und = pin(
         li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
         .groupBy(
             F.least("l_partkey", "p2").alias("u"),
@@ -3552,28 +3546,25 @@ def triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("w2"))
         .filter(F.col("w2") >= 2 * _TRI_MINSUP)
         .select("u", "v")
-        .localCheckpoint(eager=True)
     )
-    deg = (
+    deg = pin(
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=True)
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     smaller_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    fwd = (
+    fwd = pin(
         und.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(smaller_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(smaller_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
-        .localCheckpoint(eager=True)
     )
     w1 = fwd.select(F.col("s"), F.col("t").alias("y"))
     w2 = fwd.select(F.col("s"), F.col("t").alias("z"))
@@ -3656,17 +3647,17 @@ def _hb_est_sql(intdiv: str) -> str:
 
 def _hb_round_states(spark, sf_dir):
     """(nodes, [h0..hT]) — the shared HyperBall register pipeline:
-    support-thresholded undirected edges localCheckpoint once, h0 =
-    each node's own md5 register, round t = element-wise register MAX
-    over the edge relation (one equi-join + one map-side-combined
-    (node, reg) MAX per round, each state localCheckpoint'd so later
+    support-thresholded undirected edges pinned once, h0 = each
+    node's own md5 register, round t = element-wise register MAX over
+    the edge relation (one equi-join + one map-side-combined
+    (node, reg) MAX per round, each state pinned so later
     consumers never re-execute earlier rounds). Used by both
     hyperball_neighborhood_report and harmonic_centrality_topk."""
     from http_log_anonymizer_spark.functions.text import hash64
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = (
+    und = pin(
         li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
         .groupBy(
             F.least("l_partkey", "p2").alias("u"),
@@ -3675,7 +3666,6 @@ def _hb_round_states(spark, sf_dir):
         .agg(F.count("*").alias("w2"))
         .filter(F.col("w2") >= 2 * _HB_MINSUP)
         .select("u", "v")
-        .localCheckpoint(eager=True)
     )
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -3684,7 +3674,7 @@ def _hb_round_states(spark, sf_dir):
     u_draw = hash64("node", "hbrank") % (1 << _HB_RANKBITS)
     # h0: the draw materializes as a named column first (the rank CASE
     # references it by name in both engines)
-    h = (
+    h = pin(
         nodes.select("node", u_draw.alias("u"))
         .select(
             "node",
@@ -3693,7 +3683,6 @@ def _hb_round_states(spark, sf_dir):
                 "CAST(CASE WHEN u = 0 THEN 41 ELSE 41 - length(bin(u)) END AS BIGINT)"
             ).alias("rank"),
         )
-        .localCheckpoint(eager=True)
     )
     states = [h]
     for _ in range(_HB_ROUNDS):
@@ -3702,10 +3691,9 @@ def _hb_round_states(spark, sf_dir):
             .select(F.col("dst").alias("node"), "reg", "rank")
             .unionByName(h.select("node", "reg", "rank"))
         )
-        h = (
+        h = pin(
             flows.groupBy("node", "reg")
             .agg(F.max("rank").alias("rank"))
-            .localCheckpoint(eager=True)
         )
         states.append(h)
     return nodes, states
@@ -3808,12 +3796,12 @@ def hyperball_neighborhood_report(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: support-thresholded edges (the triangle_counts
     pruning — weight-1 noise edges dominate raw co-occurrence graphs)
-    localCheckpoint once; state is (node, reg, rank) <= |V| x
+    pinned once; state is (node, reg, rank) <= |V| x
     {_HB_REGS} rows of three ints — NODE-sized, never edge-sized;
     each round is one equi-join state-on-edges plus a map-side-
     combined (node, reg) MAX — the shape that made HyperBall run on
     billion-node web graphs with HLLs in core and the graph streamed
-    from disk. Per-round localCheckpoint keeps the t-th summary from
+    from disk. A per-round pin keeps the t-th summary from
     re-executing rounds 0..t-1 (the suffix-array chain lesson)."""
     nodes, states = _hb_round_states(spark, sf_dir)
 
@@ -4273,22 +4261,15 @@ def _lpa_pipeline(spark: SparkSession, sf_dir: str, pin_labels: bool = False):
     construction is byte-identical to what label_propagation_communities
     inlined before, so its plan and oracle are unchanged.
 
-    The thresholded edge table is pinned to scratch PARQUET (the
-    hits_copurchase discipline) — NOT localCheckpoint: the r10
-    second-session sf10 A/B that rejected pinning used heap
-    checkpoints (144.1 s unpinned vs 164.7 s pinned, GC-pressured); a
-    fresh r10 fourth-session A/B with the off-heap parquet pin reads
-    the opposite, both run orders: LPA sf10 plain 137.4/74.3 s vs
-    pinned 65.9/53.7 s, modularity sf10 unpinned 171.2/104.5 s vs
-    edges+labels pinned 61.4/86.6 s (sf0.1: ~19-34 -> ~7-13 s). The
-    rounds then iterate over a columnar scan instead of re-deriving
-    the self-join through 4 rounds of lineage, with zero block-manager
-    heap residency. ``pin_labels`` additionally pins the FINAL
+    The thresholded edge table is pinned (r10 A/B, both run orders:
+    LPA sf10 unpinned 137.4/74.3 s vs pinned 65.9/53.7 s, modularity
+    sf10 unpinned 171.2/104.5 s vs edges+labels pinned 61.4/86.6 s).
+    The rounds then iterate over a columnar scan instead of
+    re-deriving the self-join through 4 rounds of lineage.
+    ``pin_labels`` additionally pins the FINAL
     node-sized label table — for the modularity consumer, whose two
     scoring joins would otherwise re-derive all rounds twice; the
     community query's single consumer doesn't need it."""
-    from http_log_anonymizer_spark.operators.suffix_array import pin
-
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     other = li.select(
         F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("dst")
@@ -4347,9 +4328,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     triangle_counts — weight-1 noise edges dominate raw co-occurrence
     graphs and contribute nothing to community structure. Each round is
     one equi-join of labels onto edge sources (the thresholded edge
-    table is pinned once to scratch parquet — the hits_copurchase
-    discipline; see _lpa_pipeline for the r10 A/B that reversed the
-    earlier heap-checkpoint verdict), one groupBy(dst, lbl) with
+    table is pinned once; see _lpa_pipeline for the r10 A/B), one
+    groupBy(dst, lbl) with
     map-side combine, and a
     per-node argmax window whose partition size is bounded by the
     node's distinct-neighbor-label count (<= degree) — never
@@ -4445,13 +4425,12 @@ def kcore_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw co-occurrence pairs) plus node-sized survivor tables —
     # contrast community_modularity_report, whose fan-out is WITHIN
     # one job and measured the opposite trade (see its docstring).
-    edges = (
+    edges = pin(
         li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.dst))
         .groupBy(F.col("l_partkey").alias("src"), "dst")
         .agg(F.count("*").alias("w"))
         .filter(F.col("w") >= _KCORE_MINSUP)
         .select("src", "dst")
-        .localCheckpoint(eager=True)
     )
     alive = edges.select(F.col("src").alias("node")).distinct()
     rounds = []
@@ -4460,10 +4439,9 @@ def kcore_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             alive.select(F.col("node").alias("src")), "src"
         ).join(alive.select(F.col("node").alias("dst")), "dst")
         deg = ex.groupBy("dst").agg(F.count("*").alias("deg"))
-        alive = (
+        alive = pin(
             deg.filter(F.col("deg") >= _KCORE_K)
             .select(F.col("dst").alias("node"))
-            .localCheckpoint(eager=True)
         )
         surviving_edges = edges.join(
             alive.select(F.col("node").alias("src")), "src"
@@ -5951,7 +5929,13 @@ def psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     mm = v.agg(F.min("c").alias("lo"), F.max("c").alias("hi"))
-    b0 = (
+    # the bucket table is bounded (cohorts x buckets); pinned because b0
+    # feeds the pooled-ALL union, the cohort grid AND the completion
+    # join, and without a hard boundary each branch re-derived it from
+    # the corpus (plan-audited r07: 8 FileScans -> 2; the remaining pair
+    # is the inherent min/max pass for the data-derived edges plus the
+    # bucketize pass)
+    b0 = pin(
         v.crossJoin(mm)
         .select(
             F.col("event_type").alias("cohort"),
@@ -5963,13 +5947,6 @@ def psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_ref").cast("long").alias("n_ref"),
             F.sum(1 - F.col("is_ref")).cast("long").alias("n_cur"),
         )
-        # the bucket table is bounded (cohorts x buckets); materialize
-        # it — b0 feeds the pooled-ALL union, the cohort grid AND the
-        # completion join, and without a hard boundary each branch
-        # re-derived it from the corpus (plan-audited r07: 8 FileScans
-        # -> 2; the remaining pair is the inherent min/max pass for the
-        # data-derived edges plus the bucketize pass)
-        .localCheckpoint()
     )
     h = b0.unionByName(
         b0.groupBy("bucket")
@@ -6140,10 +6117,12 @@ def ks_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize it so the union's two branches (per-cohort + pooled
     # ALL) don't each re-scan the corpus — plan-audited: 2 FileScans
     # without this, 1 with (at 100 TB that is the whole cost)
-    t0 = v.groupBy(F.col("event_type").alias("cohort"), "c").agg(
-        F.sum("is_ref").cast("long").alias("r"),
-        F.sum(1 - F.col("is_ref")).cast("long").alias("q"),
-    ).localCheckpoint()
+    t0 = pin(
+        v.groupBy(F.col("event_type").alias("cohort"), "c").agg(
+            F.sum("is_ref").cast("long").alias("r"),
+            F.sum(1 - F.col("is_ref")).cast("long").alias("q"),
+        )
+    )
     # (cohort, c) must be UNIQUE below: the cumulative window is
     # peer-order-dependent on duplicates (and the Spark RANGE frame
     # would diverge from the oracle's ROWS frame) — regroup after the
@@ -6559,7 +6538,7 @@ def link_prediction_ra(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores, so the driver hash-checks the report."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = (
+    und = pin(
         li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
         .groupBy(
             F.least("l_partkey", "p2").alias("u"),
@@ -6568,17 +6547,15 @@ def link_prediction_ra(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("w2"))
         .filter(F.col("w2") >= 2 * _LP_MINSUP)
         .select("u", "v")
-        .localCheckpoint(eager=True)
     )
     adj = und.select(F.col("u").alias("z"), F.col("v").alias("x")).unionByName(
         und.select(F.col("v").alias("z"), F.col("u").alias("x"))
     )
     deg = adj.groupBy(F.col("z").alias("node")).agg(F.count("*").alias("d"))
-    centers = (
+    centers = pin(
         adj.join(deg, adj.z == deg.node)
         .filter(F.col("d") <= _LP_MAXDEG)
         .select("z", "x", "d")
-        .localCheckpoint(eager=True)
     )
     a = centers.select("z", F.col("x").alias("u"), "d")
     b = centers.select(F.col("z").alias("z2"), F.col("x").alias("v"))
@@ -6835,13 +6812,9 @@ def community_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (the triangle_counts clustering-coefficient idiom).
     The pooled total folds the SAME per-community doubles the report
     shows, so the global Q is reproducible from the rows above it."""
-    # Pinned pipeline (parquet, not localCheckpoint): labels feeds two
-    # scoring joins and edges three — the classic re-derivation trap.
-    # The r10 second-session A/B that kept this unpinned measured HEAP
-    # checkpoints (144.1 s unpinned vs 164.7 s pinned at sf10, GC
-    # pressure); the fourth-session A/B with the off-heap parquet pin
-    # reverses it in both run orders — see _lpa_pipeline's docstring
-    # for the numbers (sf10 171.2/104.5 -> 61.4/86.6 s).
+    # Pinned pipeline: labels feeds two scoring joins and edges three —
+    # the classic re-derivation trap (see _lpa_pipeline's docstring for
+    # the sf10 numbers, 171.2/104.5 -> 61.4/86.6 s).
     edges, labels = _lpa_pipeline(spark, sf_dir, pin_labels=True)
     lab_src = labels.select(F.col("node").alias("src"), F.col("lbl").alias("cs"))
     lab_dst = labels.select(F.col("node").alias("dst"), F.col("lbl").alias("cd"))
@@ -6981,24 +6954,22 @@ def association_rules_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicated the whole pipeline (26 -> ~8 Exchanges, 24.2 s at
     # sf1; top-25 output verified row-identical and oracle-green at
     # both gate SFs).
-    # The basket table is materialized ONCE (localCheckpoint): it has
+    # The basket table is pinned ONCE: it has
     # three consumers (basket count, item supports, pair generation)
     # and without a pin each re-ran the lineitem scan + collect_set
     # shuffle (r10 measurement at sf1: 24.5 -> 21.8 s warm; the item
     # support table is likewise pinned — its explode+groupBy fed both
     # rule-direction joins).
-    baskets = (
+    baskets = pin(
         _t(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_orderkey").alias("basket"))
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-        .localCheckpoint(eager=True)
     )
     n = baskets.agg(F.count("*").alias("n_baskets"))
-    supp1 = (
+    supp1 = pin(
         baskets.select(F.explode("items").alias("item"))
         .groupBy("item")
         .agg(F.count("*").alias("s"))
-        .localCheckpoint(eager=True)
     )
     # sequence(1, size-1) DESCENDS when size = 1 (Spark semantics), so
     # single-item baskets — which contribute no pairs — must be
@@ -7276,7 +7247,7 @@ def graph_assortativity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     hubs cannot overflow the intermediate."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = (
+    und = pin(
         li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
         .groupBy(
             F.least("l_partkey", "p2").alias("u"),
@@ -7285,14 +7256,13 @@ def graph_assortativity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("w2"))
         .filter(F.col("w2") >= 2 * _LP_MINSUP)
         .select("u", "v")
-        .localCheckpoint(eager=True)
     )
-    deg = (
+    deg = pin(
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
-    ).localCheckpoint(eager=True)
+    )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     sums = (
@@ -7700,7 +7670,7 @@ def theilsen_scan(daily_xy: DataFrame) -> DataFrame:
     """Reduce half of theilsen_trend_report over an (x, y) daily table
     (day index, cents) — factored so the streaming monitor can replay
     it on its folded state. See the query docstring for contracts."""
-    daily = daily_xy.localCheckpoint(eager=True)
+    daily = pin(daily_xy)
     a = daily.select(F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = daily.select(F.col("x").alias("xb"), F.col("y").alias("yb"))
     slopes = a.join(b, F.col("xb") > F.col("xa")).select(
@@ -7874,13 +7844,13 @@ def ktruss_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     triple explodes to exactly three integer edge rows, support is a
     map-side-combined groupBy on (u, v), and the threshold join prunes
     the edge set before the next round ever builds a wedge. Edge state
-    shrinks monotonically; each round's output is localCheckpointed so
+    shrinks monotonically; each round's output is pinned so
     round t+1 starts from materialized survivors instead of replaying
     rounds 0..t (the loop-carried-state rule — contrast the modularity
     negative result, where the fan-out was WITHIN one job)."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = (
+    edges = pin(
         li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
         .groupBy(
             F.least("l_partkey", "p2").alias("u"),
@@ -7889,7 +7859,6 @@ def ktruss_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("w2"))
         .filter(F.col("w2") >= 2 * _KTRUSS_MINSUP)
         .select("u", "v")
-        .localCheckpoint(eager=True)
     )
 
     def survivors(e: DataFrame) -> DataFrame:
@@ -7904,14 +7873,13 @@ def ktruss_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         smaller = (F.col("du") < F.col("dv")) | (
             (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
         )
-        fwd = (
+        fwd = pin(
             e.join(du, "u")
             .join(dv, "v")
             .select(
                 F.when(smaller, F.col("u")).otherwise(F.col("v")).alias("s"),
                 F.when(smaller, F.col("v")).otherwise(F.col("u")).alias("t"),
             )
-            .localCheckpoint(eager=True)
         )
         w1 = fwd.select("s", F.col("t").alias("y"))
         w2 = fwd.select("s", F.col("t").alias("z"))
@@ -7939,7 +7907,7 @@ def ktruss_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("ntri") >= _KTRUSS_K - 2)
             .select("u", "v")
         )
-        return e.join(supp, ["u", "v"]).localCheckpoint(eager=True)
+        return pin(e.join(supp, ["u", "v"]))
 
     rounds = [edges]
     for _ in range(_KTRUSS_ROUNDS):

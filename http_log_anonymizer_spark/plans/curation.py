@@ -45,6 +45,7 @@ from http_log_anonymizer_spark.functions.text import (
     shingles_sql,
     tokens_ws,
 )
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.registry import register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -715,10 +716,8 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.explode(F.concat("ts", shingles("ts", 2))).alias("ng"),
     ).select("doc_id", "lang", F.pmod(hash64("ng"), F.lit(_DSIR_BUCKETS)).alias("b"))
-    # eager local checkpoint, not cache(): one materialization for the
-    # four consumers below without pinning a cache-manager entry for
-    # the rest of the session (ADVICE r02).
-    feats = feats.localCheckpoint(eager=True)
+    # one pass for the four consumers below
+    feats = pin(feats)
 
     q = feats.groupBy("b").agg(F.count("*").alias("nq"))
     p = (
@@ -2117,7 +2116,7 @@ def template_prefix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct-prefix table feeds both the summary and the top-1
     # window; it is prefix-bounded but derived from the full scan —
     # pin it to one corpus read (the psi/ks plan-audit lesson)
-    grp = grp.localCheckpoint()
+    grp = pin(grp)
     w = Window.partitionBy("source").orderBy(F.desc("n"), F.asc("prefix"))
     top = (
         grp.withColumn("rk", F.row_number().over(w))
@@ -2606,12 +2605,11 @@ def conformal_threshold_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tokenize+score pipeline — 4 corpus scans for one report.
     # Aggregating to per-(split, grid-value) counts first is a single
     # scan, and the result is bounded by 2 x {_CONF_GRID} rows, so the
-    # localCheckpoint that stops the four consumers from recomputing
-    # it is constant-size at any corpus.
-    sq = (
+    # pin that stops the four consumers from recomputing it is
+    # constant-size at any corpus.
+    sq = pin(
         cs.groupBy("split", "q")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     ncal = sq.filter("split = 'cal'").agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n_cal")

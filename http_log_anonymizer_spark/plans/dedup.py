@@ -35,6 +35,7 @@ from http_log_anonymizer_spark.functions.text import (
     shingles_sql,
     tokens_ws,
 )
+from http_log_anonymizer_spark.operators.materialize import pin, pin_counted
 from http_log_anonymizer_spark.plans.registry import ScaleGate, register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -1785,7 +1786,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", hash64("s").alias("h"))
         .distinct()
     )
-    e = e.localCheckpoint(eager=True)  # sizes + self-join reuse one build
+    e = pin(e)  # sizes + self-join reuse one build
     sz = e.groupBy("source").agg(F.count("*").alias("n"))
     a, b = e.alias("a"), e.alias("b")
     inter = (
@@ -1877,21 +1878,15 @@ def _sa_build(spark: SparkSession, sf_dir: str):
         (F.col("pos0") + 1 > F.col("n")).alias("is_sent"),
     )
 
-    from http_log_anonymizer_spark.operators.suffix_array import pin, pin_counted
-
-    # off-heap pin: the exploded corpus is the largest intermediate
-    # (N positions x token strings); a localCheckpoint of it OOM'd the
-    # 8g heap at N=27M (sf100). pin_counted reads N from the written
-    # footers (no count job) — it feeds the arithmetic bucket ids that
-    # replace the per-round RangePartitioner sampling passes (r10).
+    # pin_counted reads N from the written footers (no count job) — it
+    # feeds the arithmetic bucket ids that replace the per-round
+    # RangePartitioner sampling passes (r10).
     corpus, n_pos = pin_counted(corpus)
 
     tables = build_rank_tables(corpus.select("gpos", "tok"), _SA_ROUNDS, n_rows=n_pos)
     sa = suffix_order(tables[-1], n_rows=n_pos)
     # pin: al is consumed by several downstream subplans (descent
-    # output feeds lcp minima, run windows AND the min tables) — and
-    # chained materialization over this base must be a parquet
-    # round-trip, not a checkpoint (see operators/suffix_array.py:pin).
+    # output feeds lcp minima, run windows AND the min tables).
     al = pin(adjacent_lcp(sa, tables, corpus.select("gpos", "tok")))
     return t2, corpus, tables, sa, al, n_pos
 
@@ -2236,7 +2231,7 @@ def suffix_selfrep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix_array_dup_report with rep_* naming; max_rep_span is the
     longest exact self-repeat — the span the Gopher n-gram ratios can
     only bound."""
-    from http_log_anonymizer_spark.operators.suffix_array import pair_lcp, pin
+    from http_log_anonymizer_spark.operators.suffix_array import pair_lcp
 
     t2, corpus, tables, sa, al, _n_pos = _sa_build(spark, sf_dir)
     cd = corpus.select("gpos", "doc_id", "pos", "is_sent")
@@ -2749,10 +2744,10 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-executed it): 32 document-scan references in the physical
     # plan. truth/cand are pair tables at audit scale; sh/bands are
     # exactly the tables dedup_minhash_lsh itself caches.
-    sh = _hashed_shingle_arrays(spark, sf_dir).localCheckpoint(eager=True)
+    sh = pin(_hashed_shingle_arrays(spark, sf_dir))
     sig = minhash_signatures(sh)
-    bands = band_index(sig).localCheckpoint(eager=True)
-    cand = band_candidates(bands, bands).localCheckpoint(eager=True)
+    bands = pin(band_index(sig))
+    cand = pin(band_candidates(bands, bands))
 
     edges = sh.select("doc_id", F.explode("sh").alias("h"))
     sz = edges.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -2764,7 +2759,7 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("da", "db")
         .agg(F.count("*").alias("i"))
     )
-    truth = (
+    truth = pin(
         inter.join(sz.select(F.col("doc_id").alias("da"), F.col("n").alias("na")), "da")
         .join(sz.select(F.col("doc_id").alias("db"), F.col("n").alias("nb")), "db")
         .filter(
@@ -2772,7 +2767,6 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= _JACCARD_THRESHOLD
         )
         .select("da", "db")
-        .localCheckpoint(eager=True)
     )
     hit = truth.join(cand, ["da", "db"])
 
@@ -2993,7 +2987,11 @@ def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_table(
         spark, sf_dir, "documents", spread=True, bytes_per_task=256 * 1024
     ).select("doc_id", tokens_ws("text").alias("toks"))
-    sh = (
+    # sh feeds the type table AND the occurrence join; without a hard
+    # boundary each consumer re-tokenizes + re-shingles the heavy text
+    # column (plan-audited: 5 FileScans -> 1 text scan + doc_id-only
+    # scans). The pin is (doc_id, hash) = 16 bytes/row.
+    sh = pin(
         t.select(
             "doc_id",
             F.explode(
@@ -3002,12 +3000,6 @@ def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g"),
         )
-        # sh feeds the type table AND the occurrence join; without a
-        # hard boundary each consumer re-tokenizes + re-shingles the
-        # heavy text column (plan-audited: 5 FileScans -> 1 text scan
-        # + doc_id-only scans). The checkpoint is (doc_id, hash) = 16
-        # bytes/row — the pin(corpus) discipline from the suffix array.
-        .localCheckpoint()
     )
     # decile via the two-level TeraSort rank (operators/suffix_array.
     # ranked) — a global ntile window would funnel every doc_id
@@ -3117,16 +3109,18 @@ def containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_table(
         spark, sf_dir, "documents", spread=True, bytes_per_task=256 * 1024
     ).select("doc_id", tokens_ws("text").alias("toks"))
-    # checkpoint the ARRAY form (doc-sized rows) — the exploded posting
+    # pin the ARRAY form (doc-sized rows) — the exploded posting
     # list AND the verify legs both derive from it, and the md5 shingle
     # pipeline runs exactly once either way, but the array table is the
     # shape verification wants (see below)
-    arr = t.select(
-        "doc_id",
-        F.array_distinct(F.transform(shingles("toks"), lambda s: hash64(s))).alias(
-            "sh"
-        ),
-    ).localCheckpoint()
+    arr = pin(
+        t.select(
+            "doc_id",
+            F.array_distinct(F.transform(shingles("toks"), lambda s: hash64(s))).alias(
+                "sh"
+            ),
+        )
+    )
     sh = arr.select("doc_id", F.explode("sh").alias("g"))
     sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     dfq = sh.groupBy("g").agg(F.count("*").alias("df"))

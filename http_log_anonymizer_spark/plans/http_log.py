@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from http_log_anonymizer_spark.functions import anonymize_ip_fast
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.registry import register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -672,7 +673,7 @@ def t_closeness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (stage, QI, status) type table feeds three derivations below;
     # it is class-bounded, so pin it to one corpus scan (the
     # psi/ks_drift_report plan-audit lesson)
-    cs = cs.localCheckpoint()
+    cs = pin(cs)
     cls = cs.groupBy("stage", "remote_addr", "cache_status").agg(
         F.sum("c").alias("sz")
     )

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.registry import register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -477,17 +478,19 @@ def linkage_blocking_recall_report(spark: SparkSession, sf_dir: str) -> DataFram
     # (r10, guide §2.4): the report consumed j from 11 branches (the
     # true-pair count, then caught/key-group-A/key-group-B per
     # strategy plus the union row), and each branch re-executed the
-    # corpus scan + shuffle_hash join. The checkpointed table is the
+    # corpus scan + shuffle_hash join. The pinned table is the
     # join output projected to just the 2 x |strategies| key columns
     # (~50 B/row — narrow, spill-backed), so every branch now reads a
     # materialized narrow table instead of re-joining the corpus.
-    jk = j.select(
-        *[
-            F.expr(expr.format(intdiv="DIV")).alias(f"{side}_{name}")
-            for name, pair in keys.items()
-            for side, expr in zip(("ka", "kb"), pair)
-        ]
-    ).localCheckpoint(eager=True)
+    jk = pin(
+        j.select(
+            *[
+                F.expr(expr.format(intdiv="DIV")).alias(f"{side}_{name}")
+                for name, pair in keys.items()
+                for side, expr in zip(("ka", "kb"), pair)
+            ]
+        )
+    )
     n = jk.agg(F.count("*").alias("n"))
     from functools import reduce
 

@@ -38,6 +38,7 @@ from http_log_anonymizer_spark.functions.vectors import (
     unit_cte_sql,
     unit_from,
 )
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.registry import ScaleGate, register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -1688,13 +1689,13 @@ def _pq_impl(
         # pin the rotated corpus (same rationale as _sqrt_pq_scan: the
         # training loop re-triggers its input; rotation is per-action
         # interpreted HOF work otherwise)
-        e = _opq_rotate(e).localCheckpoint()
+        e = pin(_opq_rotate(e))
     assignments, centroids = kmeans_quantized_table(e, k=_KM_K, rounds=_KM_ROUNDS)
     cv = spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "label int, cvec array<double>",
     )
-    resid = (
+    resid = pin(
         e.join(assignments.select("vec_id", F.col("cluster").alias("label")), "vec_id")
         .join(F.broadcast(cv), "label")
         .select(
@@ -1704,7 +1705,6 @@ def _pq_impl(
                 F.col("embedding").cast("array<double>"), "cvec", lambda x, c: x - c
             ).alias("r"),
         )
-        .localCheckpoint()
     )
 
     # Fused subspace training (r10, guide §2.4/§5): the 8 codebooks
@@ -2525,10 +2525,10 @@ def _sqrt_pq_scan(
         # int-op interpreted HOF per vector, and the trainings below
         # re-trigger their input many times — lazily recomputing the
         # rotated corpus per action measured 89-140 s at 20k vectors vs
-        # ~20 s for the unrotated tier (r09 ladder). One localCheckpoint
-        # makes every downstream pass read the rotated vectors, exactly
+        # ~20 s for the unrotated tier (r09 ladder). One pin makes
+        # every downstream pass read the rotated vectors, exactly
         # how a production index stores the pretransformed corpus.
-        e = _opq_rotate(e).localCheckpoint()
+        e = pin(_opq_rotate(e))
     n = e.count()
     k = int(round(math.sqrt(n)))
     smod = max(1, n // (50 * k))
@@ -2543,7 +2543,7 @@ def _sqrt_pq_scan(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "label int, cvec array<double>",
     )
-    resid = (
+    resid = pin(
         e.join(assignments.select("vec_id", F.col("cluster").alias("label")), "vec_id")
         .join(F.broadcast(cv), "label")
         .select(
@@ -2553,7 +2553,6 @@ def _sqrt_pq_scan(
                 F.col("embedding").cast("array<double>"), "cvec", lambda x, c: x - c
             ).alias("r"),
         )
-        .localCheckpoint()
     )
 
     # Fused subspace training (r10, guide §2.4/§5) — see _pq_impl: one
@@ -2746,10 +2745,9 @@ def ann_ivf_sqrt_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id so this fetch is partition-pruned). The rerank itself joins
     two shortlist-sized tables — no new shuffle shape, exactly the
     FAISS refine step re-expressed relationally."""
-    sl = (
+    sl = pin(
         _sqrt_pq_scan(spark, sf_dir, _PQ_RERANK_R)
         .select("query_id", "neighbor_id")
-        .localCheckpoint()
     )
     ids = (
         sl.select(F.col("neighbor_id").alias("vec_id"))
@@ -2758,7 +2756,7 @@ def ann_ivf_sqrt_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     uu = _unit_table(spark, sf_dir, cache=False)
     # one scan of the corpus, broadcast semi-join fetch of raw vectors
-    fetched = uu.join(F.broadcast(ids), "vec_id").localCheckpoint()
+    fetched = pin(uu.join(F.broadcast(ids), "vec_id"))
     scored = (
         sl.join(
             fetched.select(
@@ -3378,7 +3376,7 @@ def ann_srht_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rotation for BOTH its corpus scan and its query-shard pass
     # (4 re-derivations for the 2-dim ladder); the table is gate-bounded
     # (<= 250k rows), exactly the _sqrt_pq_scan pinning rationale.
-    rot = _opq_rotate(e).localCheckpoint()
+    rot = pin(_opq_rotate(e))
     reports = []
     for dp in _MRL_DIMS:
         t = rot.select("vec_id", F.slice("embedding", 1, dp).alias("te"))

@@ -24,6 +24,7 @@ from http_log_anonymizer_spark.functions.text import (
     tokens_re,
     tokens_ws,
 )
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.registry import register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -1331,9 +1332,7 @@ def rerank_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenization run on O(Q*k) candidate rows instead of the corpus,
     # and the pool ids stay executor-side. LEFT-joined dimension rows
     # outside the pool never matched, so results are unchanged.
-    pool = fused.select(
-        "query_id", "cand", F.col("rank").alias("rrf_rank")
-    ).localCheckpoint(eager=True)
+    pool = pin(fused.select("query_id", "cand", F.col("rank").alias("rrf_rank")))
     ids = (
         pool.select(F.col("query_id").alias("vec_id"))
         .unionByName(pool.select(F.col("cand").alias("vec_id")))
@@ -1485,7 +1484,7 @@ def kn_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigram-type table costs more than the 4 consumers' scan+partial-agg
     # recomputes save (86.8 s -> 102.8 s); the TRIGRAM table in
     # mkn_trigram_perplexity measured the opposite (373 -> 214 s) and
-    # keeps its localCheckpoint
+    # stays pinned
     c2 = bg.groupBy("w1", "w2").agg(F.count("*").alias("n2"))
     ctx = c2.groupBy("w1").agg(
         F.count("*").alias("f1"), F.sum("n2").alias("c1")
@@ -1698,14 +1697,12 @@ def mkn_trigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts[i + 1]").alias("w2"),
         F.expr("ts[i + 2]").alias("w3"),
     )
-    # materialized ONCE (localCheckpoint): five model aggregates read the
-    # trigram-type table and ReuseExchange does not fire across their
-    # differing re-shuffle keys — measured 8 scans + 8 explodes without
-    # this, and sf100 wall 373 -> 214 s with it (the bigram-level queries
-    # measured the OPPOSITE trade and stay un-checkpointed)
-    c3 = (
-        bg3.groupBy("w1", "w2", "w3").agg(F.count("*").alias("n3c")).localCheckpoint()
-    )
+    # pinned: five model aggregates read the trigram-type table and
+    # ReuseExchange does not fire across their differing re-shuffle keys
+    # — measured 8 scans + 8 explodes without this, and sf100 wall
+    # 373 -> 214 s with it (the bigram-level queries measured the
+    # OPPOSITE trade and stay unpinned)
+    c3 = pin(bg3.groupBy("w1", "w2", "w3").agg(F.count("*").alias("n3c")))
     ctx12 = c3.groupBy("w1", "w2").agg(
         F.sum("n3c").alias("c12"),
         F.sum(F.when(F.col("n3c") == 1, 1).otherwise(0)).alias("t1"),
@@ -2609,7 +2606,7 @@ def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt")
     )
     # vocabulary-bounded: one materialization feeds both union branches
-    tc0 = tc0.localCheckpoint()
+    tc0 = pin(tc0)
     tc = tc0.unionByName(
         tc0.groupBy("tok")
         .agg(F.sum("cnt").alias("cnt"))
@@ -2875,12 +2872,9 @@ def watermark_greenlist_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(
         spark, sf_dir, "documents", spread=True, bytes_per_task=256 * 1024
     )
-    # source-bounded; one materialization feeds the per-source and
-    # pooled-ALL readout branches (the pre-refactor localCheckpoint
-    # sat on the doc table; the rollup is strictly smaller)
-    state = wm_cohort_rollup(
-        wm_doc_stats(d.select("source", "doc_id", "text"))
-    ).localCheckpoint()
+    # source-bounded; one pin feeds the per-source and pooled-ALL
+    # readout branches
+    state = pin(wm_cohort_rollup(wm_doc_stats(d.select("source", "doc_id", "text"))))
     return wm_readout(state)
 
 
@@ -3345,8 +3339,7 @@ def rho_excess_loss_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the perplexity family's type-table discipline — all
     counting shuffles key on token types with map-side combine, the
-    excess table is a bounded TYPE table materialized once
-    (localCheckpoint) and hash-joined onto the occurrence stream
+    excess TYPE table is hash-joined onto the occurrence stream
     (shuffle_hash hints, r10 — was merge: the static planner must not
     broadcast off a post-agg estimate, the measured sf10 OOM class,
     and the per-partition hash build skips the stream sort), and
@@ -3376,7 +3369,6 @@ def rho_excess_loss_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c2r.hint("shuffle_hash"), ["w1", "w2"])
         .join(c1r.hint("shuffle_hash"), "w1")
         .select("w1", "w2", (nll_c - nll_r).alias("excess"))
-        .localCheckpoint()
     )
     scored = bg.join(ex.hint("shuffle_hash"), ["w1", "w2"], "left").select(
         "source", "excess"
@@ -3511,8 +3503,8 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = und.groupBy("src", "dst").agg(F.count("*").alias("w"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    # The (edges ⋈ outw) join is loop-invariant: materialize it ONCE
-    # with localCheckpoint instead of re-probing it inside every round
+    # The (edges ⋈ outw) join is loop-invariant: pin it ONCE instead
+    # of re-probing it inside every round
     # (ReusedExchange shares the exchange INPUTS across rounds, but the
     # join itself re-executed per round — r10 measurement at sf0.1:
     # 2.45 -> 2.03 s warm, results bit-identical). Safe to pin at any
@@ -3520,10 +3512,8 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token pairs, vocabulary-bounded — the reason this is NOT applied
     # to the corpus-scaled co-purchase graphs, whose sf100 edge sets
     # are ~1.8B rows).
-    ew = edges.join(outw, "src").localCheckpoint(eager=True)
-    nodes = ew.select(F.col("src").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
+    ew = pin(edges.join(outw, "src"))
+    nodes = pin(ew.select(F.col("src").alias("node")).distinct())
     ranks = nodes.select("node", F.lit(_TR_SCALE).cast("long").alias("r"))
     flow_expr = (
         "CAST((CAST(r AS DECIMAL(38,0)) * 85 * w) "
@@ -3735,7 +3725,7 @@ def retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (sf1 21.2 s, sf0.1 +1.1 s) — rel's consumers already share the
     # upstream exchanges via ReusedExchange, and the eager materialization
     # of the corpus-scale explode+distinct serializes the job for nothing.
-    per = per.localCheckpoint(eager=True)
+    per = pin(per)
     pooled = per.agg(
         F.lit(-1).cast("long").alias("query_id"),
         F.sum("n_relevant").cast("long").alias("n_relevant"),

@@ -6,12 +6,9 @@ decode must cross into Python, so it is Arrow-batched via mapInPandas
 to amortize per-row overhead (SURVEY §7 hard part 1: per-row decode is
 slow; batch it).
 
-Decoder backends, in preference order:
-
-1. pycapnp against the reference's schema file (if installed);
-2. the pure-Python wire-format codec in capnp_codec.py (always
-   available — implements the public Cap'n Proto encoding for this
-   message shape).
+The decoder is the pure-Python wire-format codec in capnp_codec.py,
+which implements the public Cap'n Proto encoding for this message
+shape.
 
 Invalid payloads decode to nothing and are dropped — the reference's
 reject-and-continue semantics (source.rs:109-123).
@@ -28,37 +25,7 @@ from pyspark.sql import functions as F
 from http_log_anonymizer_spark.schema import HTTP_LOG_SCHEMA, WIRE_FIELDS
 from http_log_anonymizer_spark.sources.capnp_codec import decode_http_log_record
 
-CAPNP_SCHEMA_PATH = "/root/reference/http_log.capnp"
 _COLUMNS = [f.name for f in HTTP_LOG_SCHEMA.fields]
-
-
-def _pycapnp_decoder():
-    """Returns a payload->dict|None callable backed by pycapnp, or None
-    if pycapnp isn't installed."""
-    try:
-        import capnp  # type: ignore
-    except ImportError:
-        return None
-    module = capnp.load(CAPNP_SCHEMA_PATH)  # pragma: no cover - needs pycapnp
-
-    def decode(payload: bytes):  # pragma: no cover - needs pycapnp
-        try:
-            with module.HttpLogRecord.from_bytes(payload) as msg:
-                return {
-                    "timestamp_epoch_milli": int(msg.timestampEpochMilli),
-                    "resource_id": int(msg.resourceId),
-                    "bytes_sent": int(msg.bytesSent),
-                    "request_time_milli": int(msg.requestTimeMilli),
-                    "response_status": int(msg.responseStatus),
-                    "cache_status": str(msg.cacheStatus),
-                    "method": str(msg.method),
-                    "remote_addr": str(msg.remoteAddr),
-                    "url": str(msg.url),
-                }
-        except Exception:
-            return None
-
-    return decode
 
 
 def decode_capnp_stream(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -72,11 +39,10 @@ def decode_capnp_stream(df: DataFrame, value_col: str = "value") -> DataFrame:
     df = df.observe("decode", F.count(F.lit(1)).alias("received"))
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _pycapnp_decoder() or decode_http_log_record
         for pdf in batches:
             rows = []
             for payload in pdf[value_col]:
-                rec = decode(bytes(payload)) if payload is not None else None
+                rec = decode_http_log_record(bytes(payload)) if payload is not None else None
                 if rec is None:
                     continue  # reject record, keep stream alive (T3)
                 rows.append(
@@ -97,4 +63,4 @@ def decode_capnp_stream(df: DataFrame, value_col: str = "value") -> DataFrame:
     return df.mapInPandas(decode_batches, HTTP_LOG_SCHEMA)
 
 
-__all__ = ["decode_capnp_stream", "CAPNP_SCHEMA_PATH", "WIRE_FIELDS"]
+__all__ = ["decode_capnp_stream", "WIRE_FIELDS"]

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.analytics import _KS_ALPHA_C
 from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
 
@@ -45,11 +46,10 @@ class StreamingKSSink(EpochStateSink):
         self.base_dir = base_dir
         self.cohort_col = cohort_col
         self.value_col = value_col
-        self._ref = (
+        self._ref = pin(
             self._quantize(reference)
             .groupBy("cohort", "c")
             .agg(F.count("*").cast("long").alias("r"))
-            .localCheckpoint()
         )
 
     def _quantize(self, df: DataFrame) -> DataFrame:

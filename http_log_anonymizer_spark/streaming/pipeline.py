@@ -16,14 +16,15 @@ Reference hot path (source.rs:86-168) -> Spark mapping:
   rate pacing (F4, limiter.rs)       -> trigger(processingTime=rate)
 
 Delivery contract: checkpointed foreachBatch gives at-least-once into
-the sink; ``dedup_keys`` upgrades the materialized table to
-exactly-once semantics (the ReplacingMergeTree argument, lib.rs:99-125).
+the sink; a deduplicating writer (``ParquetSink(dedup=True)``) upgrades
+the materialized table to exactly-once semantics (the
+ReplacingMergeTree argument, lib.rs:99-125).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,7 +76,6 @@ class PipelineSpec:
     decoder: Callable[[DataFrame], DataFrame]
     transform: Callable[[DataFrame], DataFrame]
     writer: Callable[[DataFrame, int], None]
-    dedup_keys: list[str] = field(default_factory=list)
 
 
 def build_streaming_query(
@@ -92,15 +92,9 @@ def build_streaming_query(
     ``{"availableNow": True}`` for drain-and-stop test runs.
     """
     rows = spec.transform(spec.decoder(source))
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        if spec.dedup_keys:
-            batch_df = batch_df.dropDuplicates(spec.dedup_keys)
-        spec.writer(batch_df, batch_id)
-
     writer = (
         rows.writeStream.queryName(query_name)
-        .foreachBatch(write)
+        .foreachBatch(spec.writer)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.analytics import _PSI_ALERT, _PSI_BUCKETS
 from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
 
@@ -69,11 +70,10 @@ class StreamingPSISink(EpochStateSink):
         self.value_col = value_col
         # the reference histogram is part of the deploy artifact:
         # materialize it once (cohorts x buckets rows)
-        self._ref = (
+        self._ref = pin(
             self._bucketize(reference)
             .groupBy("cohort", "bucket")
             .agg(F.count("*").cast("long").alias("n_ref"))
-            .localCheckpoint()
         )
 
     def _bucketize(self, df: DataFrame) -> DataFrame:

@@ -154,7 +154,6 @@ def _run_pipeline(spark, src_dir, out_dir, ckpt, dedup=False):
         decoder=json_decoder(),
         transform=anonymize_transform,
         writer=sink.write,
-        dedup_keys=[],
     )
     q = build_streaming_query(
         source, spec, checkpoint_dir=ckpt, trigger={"availableNow": True}

@@ -7,13 +7,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.operators.suffix_array import (
     adjacent_lcp,
     adjacent_lcp_plcp,
     build_rank_tables,
     cumsum_by_range,
     pair_lcp,
-    pin,
     prefix_max_by_range,
     ranked,
     suffix_order,
@@ -228,20 +228,28 @@ def test_intra_doc_repeat_at_sa_tail_is_not_cross_doc(spark, tmp_path):
 
 
 def test_pin_honors_configured_scratch_root(spark, tmp_path):
-    """ADVICE r05: on a multi-node cluster pin() must write to shared
-    storage, not the driver's local tempdir — spark.graft.scratchDir
-    (or $SPARK_GRAFT_SCRATCH_DIR) routes the scratch parquet. The
-    round-trip must land under the configured root and read back
-    intact."""
-    import os
+    """ADVICE r05: on a multi-node cluster pin() and the vector side
+    inputs must write to shared storage, not the driver's local
+    tempdir — spark.graft.scratchDir routes every scratch write. Both
+    must land under the configured root and read back intact."""
+    from http_log_anonymizer_spark.operators.side_input import read_shard, shard_vectors
 
     root = tmp_path / "shared-scratch"
     spark.conf.set("spark.graft.scratchDir", str(root))
     try:
         df = pin(spark.range(100).select(F.col("id").alias("i")))
         assert df.count() == 100
-        subdirs = [d for d in os.listdir(root) if d.startswith("graft_sa_")]
-        assert subdirs, "pin() did not use the configured scratch root"
+        files = df.inputFiles()
+        assert files and all(str(root) in f for f in files), (
+            "pin() did not use the configured scratch root"
+        )
+        vecs = spark.range(10).select(
+            F.col("id").alias("vec_id"), F.array(F.col("id") * 1.0, F.lit(1.0)).alias("ue")
+        )
+        side, n_shards = shard_vectors(vecs, 10, 2)
+        assert side.startswith(str(root)), "shard_vectors ignored the scratch root"
+        ids = [read_shard(f"{side}/_shard={k}", 2)[0] for k in range(n_shards)]
+        assert sorted(i for a in ids for i in a.tolist()) == list(range(10))
     finally:
         spark.conf.unset("spark.graft.scratchDir")
 

@@ -117,14 +117,17 @@ def test_cache_key_reuses_shard_materialization(spark, tmp_path):
 
 
 def test_scratch_dir_not_clobbered(spark, tmp_path):
-    """ADVICE r03: a caller-supplied scratch_dir must keep its
-    pre-existing contents — materializations land in subdirectories."""
+    """ADVICE r03: a configured scratch root (spark.graft.scratchDir)
+    must keep its pre-existing contents — materializations land in
+    subdirectories."""
     marker = tmp_path / "precious.txt"
     marker.write_text("keep me")
     u = _units(spark, n=20)
-    root, n = side_input.shard_vectors(
-        u, 20, 6, scratch_dir=str(tmp_path)
-    )
+    spark.conf.set("spark.graft.scratchDir", str(tmp_path))
+    try:
+        root, n = side_input.shard_vectors(u, 20, 6)
+    finally:
+        spark.conf.unset("spark.graft.scratchDir")
     assert marker.read_text() == "keep me"
     assert root.startswith(str(tmp_path))
     ids, mat, _ = side_input.read_shard(

@@ -17,18 +17,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import EXT_SET
 from http_log_anonymizer_spark.plans import REGISTRY
 from http_log_anonymizer_spark.session import get_spark
-
-EXT_SET = (
-    "textrank_keywords",
-    "linkage_blocking_recall_report",
-    "conformal_threshold_report",
-    "pareto_frontier_parts",
-    "changepoint_revenue",
-    "association_rules_report",
-    "attribution_report",
-)
 
 
 def main() -> None:
