@@ -18,7 +18,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from http_log_anonymizer_spark.session import get_spark
-from http_log_anonymizer_spark.streaming.neardup import (
+from http_log_anonymizer_spark.streaming.epoch_state import (
     PartitionedStateSink,
     _subdirs,
 )

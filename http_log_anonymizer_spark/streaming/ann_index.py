@@ -8,10 +8,10 @@ and every micro-batch assigns its vectors to cells with the identical
 fold-order-exact numpy argmin, appending (vec_id, label, ue) rows to
 the persisted inverted file.
 
-State machinery is the shared crash-consistent
-:class:`~http_log_anonymizer_spark.streaming.neardup.PartitionedStateSink`:
-per-batch overwrite partitions (a replayed batch replaces any torn
-attempt), two-tier marker-protocol compaction bounding file counts.
+State machinery is the partitioned-state protocol of
+``streaming/epoch_state.py``: per-batch overwrite partitions (a
+replayed batch replaces any torn attempt) and tiered marker-protocol
+compaction bounding file counts.
 
 ``probe()`` answers top-k queries against everything indexed so far
 by running the batch tier's own kernels — cell ranking via
@@ -52,7 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from http_log_anonymizer_spark.streaming.neardup import PartitionedStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import PartitionedStateSink
 
 _INDEX_SCHEMA = StructType(
     [
@@ -106,8 +106,7 @@ def assign_rows(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
 class StreamingIVFIndexSink(PartitionedStateSink):
     """foreachBatch writer maintaining an IVF inverted file over a
     (vec_id, embedding) stream against a FIXED pre-trained coarse
-    quantizer. ``base_dir`` must be executor-readable on a cluster;
-    state and the stream's checkpoint are a unit."""
+    quantizer."""
 
     def __init__(
         self, base_dir: str, centroids: list[list[float]], compact_every: int = 16
@@ -120,15 +119,9 @@ class StreamingIVFIndexSink(PartitionedStateSink):
         self._roots = (self.index_dir,)
 
     def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        self._recover()
-        self._maybe_compact(spark, batch_id)
-        if batch_df.isEmpty():
-            return
-        tag = f"b{batch_id}"
-        assign_rows(batch_df, self.centroids).write.mode("overwrite").parquet(
-            posixpath.join(self.index_dir, f"_batch={tag}")
-        )
+        tag = self._begin(batch_df, batch_id)
+        if tag is not None:
+            self._commit(assign_rows(batch_df, self.centroids), self.index_dir, tag)
 
     # -- readout ---------------------------------------------------------
 

@@ -23,14 +23,14 @@ from http_log_anonymizer_spark.plans.analytics import (
     bf_merge_rollups,
     bf_readout,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingBenfordMonitor(EpochStateSink):
     """foreachBatch writer accumulating first-digit counts over rows
-    carrying ``amount_col``. Same state/checkpoint contract as the
-    reservoir sink. ``alarm_mad_micro``: page when the pooled MAD (on
-    the 1e-6 grid) exceeds this; the default is Nigrini's
+    carrying ``amount_col`` (epoch protocol:
+    ``streaming/epoch_state.py``). ``alarm_mad_micro``: page when the
+    pooled MAD (on the 1e-6 grid) exceeds this; the default is Nigrini's
     nonconformity line ({_BENFORD_MAD[2]} = 0.015)."""
 
     def __init__(
@@ -43,17 +43,10 @@ class StreamingBenfordMonitor(EpochStateSink):
         self.amount_col = amount_col
         self.alarm_mad_micro = alarm_mad_micro
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        counts = bf_digit_counts(batch_df, self.amount_col)
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = bf_merge_rollups(counts.unionByName(state))
-        self._write_epoch(counts, tag)
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return bf_digit_counts(batch_df, self.amount_col)
+
+    _merge = staticmethod(bf_merge_rollups)
 
     # -- readout -------------------------------------------------------
 

@@ -26,15 +26,15 @@ from http_log_anonymizer_spark.plans.sampling import (
     bootstrap_base,
     bootstrap_replicas,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingBootstrapMonitor(EpochStateSink):
     """foreachBatch writer accumulating the bootstrap base over
-    (o_orderkey, o_totalprice) rows. Same state/checkpoint contract as
-    the reservoir/storage sinks: one small epoch row, replay-safe,
-    order-independent by construction (every sum is addition-
-    mergeable and the per-row weights depend only on o_orderkey).
+    (o_orderkey, o_totalprice) rows: one small epoch row
+    (``streaming/epoch_state.py``), replay-safe, order-independent by
+    construction (every sum is addition-mergeable and the per-row
+    weights depend only on o_orderkey).
 
     ``max_rel_width_permille`` configures the alarm: page when the
     order-statistic CI's width relative to the point estimate exceeds
@@ -65,18 +65,6 @@ class StreamingBootstrapMonitor(EpochStateSink):
                 for c in (f"n{j}", f"s{j}")
             ]
         )
-
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        base = self._base(batch_df)
-        state = self._read_state(spark, tag)
-        if state is not None:
-            base = self._merge(base.unionByName(state))
-        self._write_epoch(base, tag)
 
     # -- readouts ------------------------------------------------------
 

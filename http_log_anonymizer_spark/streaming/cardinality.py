@@ -22,7 +22,7 @@ persisted register table is BIT-EQUAL to running the batch HLL over
 everything that ever arrived — asserted in
 tests/test_streaming_cardinality.py, alongside torn-epoch repair and
 restart parity on the
-:class:`~http_log_anonymizer_spark.streaming.reservoir.EpochStateSink`
+:class:`~http_log_anonymizer_spark.streaming.epoch_state.EpochStateSink`
 crash-safe epoch protocol.
 
 State is exactly ``<= 2^b`` rows regardless of stream length; the
@@ -41,13 +41,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingCardinalitySink(EpochStateSink):
     """foreachBatch writer maintaining a ``2^b``-register HyperLogLog
-    over ``key_col``. Same state/checkpoint contract as the reservoir
-    sink; ``base_dir`` must be executor-readable on a cluster."""
+    over ``key_col``. Epoch protocol: ``streaming/epoch_state.py``."""
 
     def __init__(
         self, base_dir: str, b: int = 6, key_col: str = "user_id", seed: str = "hll"
@@ -60,7 +59,7 @@ class StreamingCardinalitySink(EpochStateSink):
         self.key_col = key_col
         self.seed = seed
 
-    def _batch_registers(self, batch_df: DataFrame) -> DataFrame:
+    def _base(self, batch_df: DataFrame) -> DataFrame:
         """(bucket, m_j) registers for ONE batch — the same integer-only
         construction as the batch query: md5 hash, low-b-bits bucket,
         tail rank = trailing zeros of the suffix + 1. The all-zero
@@ -88,21 +87,9 @@ class StreamingCardinalitySink(EpochStateSink):
             .agg(F.max("m_j").alias("m_j"))
         )
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # replaying an empty batch is a no-op
-        regs = self._batch_registers(batch_df)
-        state = self._read_state(spark, tag)
-        if state is not None:
-            regs = (
-                regs.unionByName(state)
-                .groupBy("bucket")
-                .agg(F.max("m_j").alias("m_j"))
-            )
-        self._write_epoch(regs, tag)
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.groupBy("bucket").agg(F.max("m_j").alias("m_j"))
 
     # -- readout -------------------------------------------------------
 

@@ -34,37 +34,29 @@ from http_log_anonymizer_spark.plans.analytics import (
     changepoint_scan,
     theilsen_scan,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 _EMPTY = "d date, s decimal(38,0), n decimal(38,0)"
 
 
 class StreamingChangepointMonitor(EpochStateSink):
     """foreachBatch writer accumulating the daily (sum, count) revenue
-    base over order-shaped rows (o_orderdate, o_totalprice). Same
-    state/checkpoint contract as the reservoir sink; ``base_dir`` must
-    be executor-readable."""
+    base over order-shaped rows (o_orderdate, o_totalprice). Epoch
+    protocol: ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str) -> None:
         self.base_dir = base_dir
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            # unlike CUSUM, a batch is NOT a time step here — event time
-            # comes from o_orderdate, so an empty batch changes nothing
-            return
-        base = changepoint_daily_base(batch_df)
-        state = self._read_state(spark, tag)
-        if state is not None:
-            base = state.unionByName(base)
-        nxt = base.groupBy("d").agg(
+    # unlike CUSUM, a batch is NOT a time step here — event time comes
+    # from o_orderdate, so an empty batch changes nothing
+    _base = staticmethod(changepoint_daily_base)
+
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.groupBy("d").agg(
             F.expr("CAST(sum(s) AS DECIMAL(38,0))").alias("s"),
             F.expr("CAST(sum(n) AS DECIMAL(38,0))").alias("n"),
         )
-        self._write_epoch(nxt, tag)
 
     # -- readout -------------------------------------------------------
 

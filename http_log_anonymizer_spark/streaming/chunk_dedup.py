@@ -23,10 +23,10 @@ Per micro-batch:
 
 State is one parquet root of 8-byte chunk hashes — O(distinct chunks),
 mergeable, shared with backfill jobs. Crash consistency and
-small-files control come from
-:class:`~http_log_anonymizer_spark.streaming.neardup.PartitionedStateSink`:
-replay-excluded reads repair any torn batch, and geometric (LSM)
-tiering bounds every compaction fold by its tier.
+small-files control are the partitioned-state protocol of
+``streaming/epoch_state.py``: replay-excluded reads repair any torn
+batch, and geometric (LSM) tiering bounds every compaction fold by its
+tier.
 
 At-least-once note: a redelivered DOCUMENT under a new batch id
 dedups against itself (its chunks are already in the seen set) and is
@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 
 from http_log_anonymizer_spark.functions.text import hash64
 from http_log_anonymizer_spark.plans.dedup import cdc_chunk_table, line_chunk_table
-from http_log_anonymizer_spark.streaming.neardup import PartitionedStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import PartitionedStateSink
 
 _CHUNKERS = {"line": line_chunk_table, "cdc": cdc_chunk_table}
 
@@ -73,9 +73,7 @@ class StreamingChunkDedupSink(PartitionedStateSink):
     ``"line"`` (fixed 10-token grid — the C4 rule) or ``"cdc"``
     (content-defined rolling-hash boundaries — shift-robust; see
     plans/dedup.py:cdc_dedup_report); both share the batch queries'
-    chunk constructions so stream and backfill agree chunk for chunk.
-    ``base_dir`` must be executor-readable; state and the stream's
-    checkpoint are a unit."""
+    chunk constructions so stream and backfill agree chunk for chunk."""
 
     def __init__(
         self, base_dir: str, compact_every: int = 16, chunker: str = "line"
@@ -91,12 +89,10 @@ class StreamingChunkDedupSink(PartitionedStateSink):
         self._roots = (self.docs_dir, self.chunks_dir)
 
     def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        self._recover()
-        self._maybe_compact(spark, batch_id)
-        if batch_df.isEmpty():
+        tag = self._begin(batch_df, batch_id)
+        if tag is None:
             return
-        tag = f"b{batch_id}"
+        spark = batch_df.sparkSession
 
         occ = _CHUNKERS[self.chunker](batch_df).select(
             "doc_id",
@@ -168,12 +164,8 @@ class StreamingChunkDedupSink(PartitionedStateSink):
                 prior_docs.select("doc_id").distinct(), "doc_id", "left_anti"
             )
 
-        docs_out.write.mode("overwrite").parquet(
-            posixpath.join(self.docs_dir, f"_batch={tag}")
-        )
-        kept.select("h").distinct().write.mode("overwrite").parquet(
-            posixpath.join(self.chunks_dir, f"_batch={tag}")
-        )
+        self._commit(docs_out, self.docs_dir, tag)
+        self._commit(kept.select("h").distinct(), self.chunks_dir, tag)
         occ.unpersist()
 
     # -- readout -------------------------------------------------------

@@ -14,7 +14,7 @@ The ``baseline`` DataFrame (key, baseline value) defines the monitored
 key universe; keys absent from a slice still step (their sum is 0), so
 the statistic decays exactly as the batch recursion's dense calendar
 does. State is |baseline| rows on the
-:class:`~http_log_anonymizer_spark.streaming.reservoir.EpochStateSink`
+:class:`~http_log_anonymizer_spark.streaming.epoch_state.EpochStateSink`
 crash-safe epoch protocol — the recurrence is order-dependent and
 non-idempotent, so replay safety comes from epochs alone (a replayed
 slice recomputes from exactly the pre-batch state), like the CMS sink.
@@ -34,14 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingCUSUMSink(EpochStateSink):
     """foreachBatch writer maintaining (key, s, s_max) CUSUM state over
     ``value_col`` sums per ``key_col``, one time step per micro-batch.
     ``baseline`` is a static (key, baseline) DataFrame defining the
-    monitored keys; ``base_dir`` must be executor-readable."""
+    monitored keys. Epoch protocol: ``streaming/epoch_state.py``; an
+    empty batch is a time step here, so this sink keeps its own
+    ``write``."""
 
     def __init__(
         self,
@@ -59,8 +61,7 @@ class StreamingCUSUMSink(EpochStateSink):
 
     def write(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
+        tag = self._begin(batch_id)
         # an empty slice is still a TIME STEP (decay applies) — unlike
         # the sketch sinks, do not early-return on empty batches
         sums = (
@@ -89,7 +90,7 @@ class StreamingCUSUMSink(EpochStateSink):
                 F.greatest(F.col("s_max"), s_new).alias("s_max"),
             )
         )
-        self._write_epoch(nxt, tag)
+        self._commit(nxt, tag)
 
     # -- readout -------------------------------------------------------
 

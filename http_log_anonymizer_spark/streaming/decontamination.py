@@ -33,7 +33,7 @@ from http_log_anonymizer_spark.plans.dedup import (
     decon_shingle_rows,
 )
 from http_log_anonymizer_spark.sources.batch import load_table
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingDecontaminationMonitor(EpochStateSink):
@@ -41,7 +41,7 @@ class StreamingDecontaminationMonitor(EpochStateSink):
     the benchmark corpus at ``bench_dir`` (its ``documents`` table
     filtered by the batch query's doc_id % 20 == 0 split rule — pass
     ``bench_filter=False`` to use the whole table as the benchmark).
-    Same state/checkpoint contract as the reservoir sink."""
+    Epoch protocol: ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str, bench_dir: str, bench_filter: bool = True) -> None:
         self.base_dir = base_dir
@@ -54,21 +54,18 @@ class StreamingDecontaminationMonitor(EpochStateSink):
             d = d.filter(F.col("doc_id") % 20 == 0)
         return decon_bench_set(d)
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        rows = decon_flagged(decon_shingle_rows(batch_df), self._bench(spark))
-        state = self._read_state(spark, tag)
-        if state is not None:
-            # keep-first by doc_id: a redelivered document's row is
-            # already in state (doc_id identifies content)
-            rows = state.unionByName(
-                rows.join(state.select("doc_id"), "doc_id", "left_anti")
-            )
-        self._write_epoch(rows, tag)
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        # a document redelivered inside one batch is shingled once
+        docs = batch_df.dropDuplicates(["doc_id"])
+        return decon_flagged(
+            decon_shingle_rows(docs), self._bench(batch_df.sparkSession)
+        )
+
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        # doc_id identifies content, so any surviving row is the first
+        # delivery's row
+        return states.dropDuplicates(["doc_id"])
 
     # -- readout -------------------------------------------------------
 

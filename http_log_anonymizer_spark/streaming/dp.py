@@ -31,13 +31,13 @@ from pyspark.sql import functions as F
 
 from http_log_anonymizer_spark.functions.text import hash64
 from http_log_anonymizer_spark.plans.http_log import _DP_EPS, dp_noise_col
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingDPHistogram(EpochStateSink):
     """foreachBatch writer maintaining exact (key..., n) counts; DP
-    noise enters only in the readout. Same state/checkpoint contract
-    as the reservoir sink."""
+    noise enters only in the readout. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(
         self,
@@ -53,25 +53,15 @@ class StreamingDPHistogram(EpochStateSink):
         self.seed = seed
         self.dedup_key = dedup_key
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
+    def _base(self, batch_df: DataFrame) -> DataFrame:
         if self.dedup_key is not None:
             batch_df = batch_df.dropDuplicates([self.dedup_key])
-        counts = batch_df.groupBy(*self.key_cols).agg(
+        return batch_df.groupBy(*self.key_cols).agg(
             F.count("*").cast("long").alias("n")
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = (
-                counts.unionByName(state)
-                .groupBy(*self.key_cols)
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-        self._write_epoch(counts, tag)
+
+    def _merge(self, states: DataFrame) -> DataFrame:
+        return states.groupBy(*self.key_cols).agg(F.sum("n").cast("long").alias("n"))
 
     # -- readout -------------------------------------------------------
 

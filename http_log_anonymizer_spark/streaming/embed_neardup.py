@@ -23,12 +23,11 @@ per micro-batch
   4. write accepted rows + their index keys + unit vectors, one
      ``_batch=b{id}`` overwrite partition per root.
 
-Crash consistency and small-files control are inherited verbatim from
-:class:`~http_log_anonymizer_spark.streaming.neardup.PartitionedStateSink`:
-a replayed batch recomputes against exactly the pre-batch state and
-overwrites any torn attempt (no tear shape survives), and every
-``compact_every`` batches committed partitions fold into one under the
-marker protocol.
+Crash consistency and small-files control are the partitioned-state
+protocol of ``streaming/epoch_state.py``: a replayed batch recomputes
+against exactly the pre-batch state and overwrites any torn attempt
+(no tear shape survives), and committed partitions fold by geometric
+tiering under the marker protocol.
 
 At scale the state is three columnar tables of O(accepted vectors) —
 the index is (vec_id, table, bucket) longs, the vector store one unit
@@ -53,7 +52,7 @@ from http_log_anonymizer_spark.plans.similarity import (
     _NDL_TABLES,
     _bucket_spark,
 )
-from http_log_anonymizer_spark.streaming.neardup import PartitionedStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import PartitionedStateSink
 
 DEFAULT_THRESHOLD = 0.45  # same operating point as the batch family
 
@@ -77,8 +76,7 @@ def bucket_keys(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 class EmbedNearDupSink(PartitionedStateSink):
     """foreachBatch writer: near-dedup a (vec_id, embedding, ...)
-    stream against all previously ACCEPTED vectors. Same state/
-    checkpoint contract as the shingle sink."""
+    stream against all previously ACCEPTED vectors."""
 
     def __init__(
         self,
@@ -86,6 +84,7 @@ class EmbedNearDupSink(PartitionedStateSink):
         threshold: float = DEFAULT_THRESHOLD,
         compact_every: int = 16,
     ) -> None:
+        super().__init__()
         self.base_dir = base_dir
         self.threshold = threshold
         self.docs_dir = posixpath.join(base_dir, "docs")
@@ -105,14 +104,11 @@ class EmbedNearDupSink(PartitionedStateSink):
         )
 
     def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        self._recover()
-        self._maybe_compact(spark, batch_id)
-        batch = batch_df.persist()
-        if batch.isEmpty():
-            batch.unpersist()
+        tag = self._begin(batch_df, batch_id)
+        if tag is None:
             return
-        tag = f"b{batch_id}"
+        spark = batch_df.sparkSession
+        batch = batch_df.persist()
 
         u = (
             batch.select("vec_id", "embedding", norm_column("embedding").alias("nrm"))
@@ -160,13 +156,13 @@ class EmbedNearDupSink(PartitionedStateSink):
 
         accepted = keep_keys.select("vec_id").distinct()
         # 3) per-batch partitions, overwrite semantics (replay repairs
-        #    any tear shape — PartitionedStateSink contract)
+        #    any tear shape)
         for df, root in (
             (u.join(accepted, "vec_id"), self.vecs_dir),
             (keep_keys, self.index_dir),
             (batch.join(accepted, "vec_id"), self.docs_dir),
         ):
-            df.write.mode("overwrite").parquet(posixpath.join(root, f"_batch={tag}"))
+            self._commit(df, root, tag)
 
         for df in (keys, u, batch):
             df.unpersist()

@@ -9,7 +9,7 @@ J. Algorithms 2005; Agarwal et al., Mergeable Summaries, PODS 2012):
 the counter table of a union of streams is the counter-wise SUM of the
 per-stream tables. Addition is NOT idempotent, so unlike the HLL/Bloom
 sinks this one leans entirely on the
-:class:`~http_log_anonymizer_spark.streaming.reservoir.EpochStateSink`
+:class:`~http_log_anonymizer_spark.streaming.epoch_state.EpochStateSink`
 epoch protocol for replay safety: each batch writes ``state_{b-1} +
 counters(batch_b)`` to a fresh epoch, and a replayed batch recomputes
 from exactly the pre-batch state instead of double-adding.
@@ -42,7 +42,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 def _hash64_py(value: str, seed: str) -> int:
@@ -52,9 +52,8 @@ def _hash64_py(value: str, seed: str) -> int:
 
 class StreamingCMSSink(EpochStateSink):
     """foreachBatch writer maintaining a ``depth x width`` Count-Min
-    counter table over ``key_col``. Same state/checkpoint contract as
-    the reservoir sink; ``base_dir`` must be executor-readable on a
-    cluster."""
+    counter table over ``key_col``. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(
         self,
@@ -72,7 +71,7 @@ class StreamingCMSSink(EpochStateSink):
         self.key_col = key_col
         self.seed_prefix = seed_prefix
 
-    def _batch_counters(self, batch_df: DataFrame) -> DataFrame:
+    def _base(self, batch_df: DataFrame) -> DataFrame:
         """(j, bucket, c) counter increments for ONE batch: every row
         increments one bucket per estimator row j. Keep in lockstep
         with plans/analytics.py:cms_user_frequency (same seeds, same
@@ -100,21 +99,9 @@ class StreamingCMSSink(EpochStateSink):
             .agg(F.count("*").alias("c"))
         )
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # replaying an empty batch is a no-op
-        counters = self._batch_counters(batch_df)
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counters = (
-                counters.unionByName(state)
-                .groupBy("j", "bucket")
-                .agg(F.sum("c").alias("c"))
-            )
-        self._write_epoch(counters, tag)
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.groupBy("j", "bucket").agg(F.sum("c").alias("c"))
 
     # -- readout -------------------------------------------------------
 

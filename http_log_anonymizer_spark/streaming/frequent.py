@@ -18,7 +18,7 @@ per micro-batch
      ones. Fully deterministic — ties all fall together, no arbitrary
      selection — so every engine replays it identically;
   4. persist the <= m surviving counters as the next epoch
-     (:class:`~http_log_anonymizer_spark.streaming.reservoir.EpochStateSink`
+     (:class:`~http_log_anonymizer_spark.streaming.epoch_state.EpochStateSink`
      crash-safe epoch protocol: torn writes are overwritten by replay,
      the pre-batch epoch survives until a later batch supersedes it).
 
@@ -41,53 +41,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingFrequentItemsSink(EpochStateSink):
     """foreachBatch writer maintaining a Misra-Gries summary of at most
-    ``m`` (item, cnt) counters over ``item_col``. Same state/checkpoint
-    contract as the reservoir sink."""
+    ``m`` (item, cnt) counters over ``item_col``. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str, m: int, item_col: str = "item") -> None:
         self.base_dir = base_dir
         self.m = m
         self.item_col = item_col
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # replaying an empty batch is a no-op
-        state = self._read_state(spark, tag)
-
-        counts = batch_df.groupBy(F.col(self.item_col).alias("item")).agg(
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(F.col(self.item_col).alias("item")).agg(
             F.count("*").alias("cnt")
         )
-        if state is not None:
-            counts = (
-                counts.unionByName(state.select("item", "cnt"))
-                .groupBy("item")
-                .agg(F.sum("cnt").alias("cnt"))
+
+    def _merge(self, states: DataFrame) -> DataFrame:
+        counts = states.groupBy("item").agg(F.sum("cnt").alias("cnt"))
+        # Misra-Gries reduction: T = the (m+1)-th largest counter
+        # (count-desc, item-asc), or 0 while at most m counters exist;
+        # subtract T everywhere, keep > 0. One tiny ordered limit + a
+        # 1-row broadcast — no driver action, no full sort
+        # (TakeOrderedAndProject).
+        t = (
+            counts.orderBy(F.desc("cnt"), "item")
+            .limit(self.m + 1)
+            .agg(
+                F.when(F.count("*") > self.m, F.min("cnt")).otherwise(0).alias("t")
             )
-        counts = counts.persist()
-        if counts.count() > self.m:
-            # Misra-Gries reduction: T = the (m+1)-th largest counter
-            # (count-desc, item-asc); subtract T everywhere, keep > 0.
-            # One tiny ordered limit + a 1-row broadcast — no driver
-            # collect, no full sort (TakeOrderedAndProject).
-            t = (
-                counts.orderBy(F.desc("cnt"), "item")
-                .limit(self.m + 1)
-                .agg(F.min("cnt").alias("t"))
-            )
-            reduced = (
-                counts.crossJoin(F.broadcast(t))
-                .select("item", (F.col("cnt") - F.col("t")).alias("cnt"))
-                .filter(F.col("cnt") > 0)
-            )
-        else:
-            reduced = counts
-        self._write_epoch(reduced, tag)
-        counts.unpersist()
+        )
+        return (
+            counts.crossJoin(F.broadcast(t))
+            .select("item", (F.col("cnt") - F.col("t")).alias("cnt"))
+            .filter(F.col("cnt") > 0)
+        )

@@ -5,7 +5,7 @@ maintained in ``foreachBatch``, the unbounded-stream twin of the batch
 This is the audit a privacy team wants DURING ingestion, not after:
 as anonymized rows stream out, the monitor folds each micro-batch's
 (QI tuple -> count) into a persisted class table (addition-merge on
-the :class:`~http_log_anonymizer_spark.streaming.reservoir.EpochStateSink`
+the :class:`~http_log_anonymizer_spark.streaming.epoch_state.EpochStateSink`
 crash-safe epoch protocol — a replayed batch recomputes from the
 pre-batch epoch, so addition never double-counts), and ``report()``
 reads the current release k (the smallest class size) plus the same
@@ -45,13 +45,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingKAnonymityMonitor(EpochStateSink):
     """foreachBatch writer maintaining per-class row counts over the
-    ``qi_cols`` quasi-identifier tuple. Same state/checkpoint contract
-    as the reservoir sink."""
+    ``qi_cols`` quasi-identifier tuple. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(
         self,
@@ -67,26 +67,16 @@ class StreamingKAnonymityMonitor(EpochStateSink):
         self.cap = cap
         self.dedup_key = dedup_key
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # replaying an empty batch is a no-op
+    def _base(self, batch_df: DataFrame) -> DataFrame:
         if self.dedup_key is not None:
             # intra-batch half of the at-least-once contract (see module
             # docstring); cross-batch dedup belongs upstream where the
             # watermark bounds the key state.
             batch_df = batch_df.dropDuplicates([self.dedup_key])
-        counts = batch_df.groupBy(*self.qi_cols).agg(F.count("*").alias("sz"))
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = (
-                counts.unionByName(state)
-                .groupBy(*self.qi_cols)
-                .agg(F.sum("sz").alias("sz"))
-            )
-        self._write_epoch(counts, tag)
+        return batch_df.groupBy(*self.qi_cols).agg(F.count("*").alias("sz"))
+
+    def _merge(self, states: DataFrame) -> DataFrame:
+        return states.groupBy(*self.qi_cols).agg(F.sum("sz").alias("sz"))
 
     # -- readout -------------------------------------------------------
 

@@ -26,15 +26,14 @@ from pyspark.sql import functions as F
 
 from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.analytics import _KS_ALPHA_C
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingKSSink(EpochStateSink):
     """foreachBatch writer accumulating the CURRENT-window value type
     table per cohort against a fixed reference window. ``reference``
     is a static (cohort_col, value_col) DataFrame (the calibration
-    window). ``base_dir`` must be executor-readable; state and the
-    stream's checkpoint are a unit."""
+    window). Epoch protocol: ``streaming/epoch_state.py``."""
 
     def __init__(
         self,
@@ -63,25 +62,16 @@ class StreamingKSSink(EpochStateSink):
 
     # -- the sink ------------------------------------------------------
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # counts are idempotent under empty slices
-        counts = (
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return (
             self._quantize(batch_df)
             .groupBy("cohort", "c")
             .agg(F.count("*").cast("long").alias("q"))
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = (
-                state.unionByName(counts)
-                .groupBy("cohort", "c")
-                .agg(F.sum("q").cast("long").alias("q"))
-            )
-        self._write_epoch(counts, tag)
+
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.groupBy("cohort", "c").agg(F.sum("q").cast("long").alias("q"))
 
     # -- readout -------------------------------------------------------
 

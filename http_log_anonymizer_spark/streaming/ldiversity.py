@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 # same bucket cap as the batch report (plans/http_log.py:_LDIV_CAP)
 from http_log_anonymizer_spark.plans.http_log import _LDIV_CAP
@@ -38,8 +38,8 @@ from http_log_anonymizer_spark.plans.http_log import _LDIV_CAP
 
 class StreamingLDiversityMonitor(EpochStateSink):
     """foreachBatch writer maintaining (qi..., sensitive, c) counts.
-    Same state/checkpoint contract as the reservoir sink; the fold is
-    the t-closeness monitor's (a shared deployment can run both
+    Epoch protocol: ``streaming/epoch_state.py``; the fold is the
+    t-closeness monitor's (a shared deployment can run both
     readouts over ONE state root)."""
 
     def __init__(
@@ -56,25 +56,17 @@ class StreamingLDiversityMonitor(EpochStateSink):
         self.sensitive_col = sensitive_col
         self.dedup_key = dedup_key
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
+    def _base(self, batch_df: DataFrame) -> DataFrame:
         if self.dedup_key is not None:
             batch_df = batch_df.dropDuplicates([self.dedup_key])
-        counts = batch_df.groupBy(*self.qi_cols, self.sensitive_col).agg(
+        return batch_df.groupBy(*self.qi_cols, self.sensitive_col).agg(
             F.count("*").cast("long").alias("c")
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = (
-                counts.unionByName(state)
-                .groupBy(*self.qi_cols, self.sensitive_col)
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-        self._write_epoch(counts, tag)
+
+    def _merge(self, states: DataFrame) -> DataFrame:
+        return states.groupBy(*self.qi_cols, self.sensitive_col).agg(
+            F.sum("c").cast("long").alias("c")
+        )
 
     # -- readout -------------------------------------------------------
 

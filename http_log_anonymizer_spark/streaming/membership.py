@@ -32,13 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingBloomSink(EpochStateSink):
     """foreachBatch writer maintaining an ``m``-bit / ``k``-hash Bloom
-    filter over ``key_col``. Same state/checkpoint contract as the
-    reservoir sink."""
+    filter over ``key_col``. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(
         self, base_dir: str, m: int = 4096, k: int = 3, key_col: str = "key"
@@ -50,7 +50,7 @@ class StreamingBloomSink(EpochStateSink):
         self.k = k
         self.key_col = key_col
 
-    def _bits(self, df: DataFrame) -> DataFrame:
+    def _base(self, df: DataFrame) -> DataFrame:
         """Distinct bit positions for every key in ``df`` — keep in
         lockstep with plans/analytics.py:bloom_membership_report."""
         from http_log_anonymizer_spark.functions.text import hash64
@@ -65,17 +65,9 @@ class StreamingBloomSink(EpochStateSink):
             out = bj if out is None else out.unionByName(bj)
         return out.distinct()
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # replaying an empty batch is a no-op
-        bits = self._bits(batch_df)
-        state = self._read_state(spark, tag)
-        if state is not None:
-            bits = bits.unionByName(state).distinct()
-        self._write_epoch(bits, tag)
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.distinct()
 
     # -- readout -------------------------------------------------------
 

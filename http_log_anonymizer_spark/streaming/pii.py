@@ -28,7 +28,7 @@ from http_log_anonymizer_spark.plans.text import (
     pii_readout,
     pii_rollup,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 # Page when a source's share of PII-carrying documents exceeds this
 # percent. Exact integer predicate: 100 * docs_with_pii > pct * n_docs.
@@ -37,8 +37,8 @@ _PII_ALARM_PCT = 0
 
 class StreamingPIIMonitor(EpochStateSink):
     """foreachBatch writer accumulating per-source PII exposure over
-    (source, text) rows. Same state/checkpoint contract as the
-    reservoir sink. ``text_col`` names the scanned column (a scrubbed
+    (source, text) rows (epoch protocol: ``streaming/epoch_state.py``).
+    ``text_col`` names the scanned column (a scrubbed
     feed monitors its own OUTPUT column and expects zeros).
 
     ``alarm_pct``: a feed that should be post-scrub clean alarms on ANY
@@ -56,17 +56,10 @@ class StreamingPIIMonitor(EpochStateSink):
         self.alarm_pct = alarm_pct
         self.text_col = text_col
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        rollup = pii_rollup(pii_doc_counts(batch_df, text_col=self.text_col))
-        state = self._read_state(spark, tag)
-        if state is not None:
-            rollup = pii_merge_rollups(rollup.unionByName(state))
-        self._write_epoch(rollup, tag)
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return pii_rollup(pii_doc_counts(batch_df, text_col=self.text_col))
+
+    _merge = staticmethod(pii_merge_rollups)
 
     # -- readout -------------------------------------------------------
 

@@ -23,7 +23,7 @@ to ``psi_drift_report`` (tests/test_streaming_psi.py) — stream fold
 and batch query are the same integer histogram.
 
 State is cohorts x buckets count rows on the
-:class:`~http_log_anonymizer_spark.streaming.reservoir.EpochStateSink`
+:class:`~http_log_anonymizer_spark.streaming.epoch_state.EpochStateSink`
 crash-safe epoch protocol: a replayed batch recomputes from exactly
 the pre-batch state, so at-least-once delivery never double-counts.
 
@@ -40,7 +40,7 @@ from pyspark.sql import Window
 
 from http_log_anonymizer_spark.operators.materialize import pin
 from http_log_anonymizer_spark.plans.analytics import _PSI_ALERT, _PSI_BUCKETS
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingPSISink(EpochStateSink):
@@ -48,9 +48,8 @@ class StreamingPSISink(EpochStateSink):
     histogram per cohort against a fixed reference histogram.
     ``reference`` is a static (cohort_col, value_col) DataFrame (the
     calibration window); ``lo``/``hi`` are the integer bucket edges
-    (inclusive) on the cent grid, fixed at deploy time. ``base_dir``
-    must be executor-readable; state and the stream's checkpoint are a
-    unit."""
+    (inclusive) on the cent grid, fixed at deploy time. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(
         self,
@@ -103,25 +102,18 @@ class StreamingPSISink(EpochStateSink):
 
     # -- the sink ------------------------------------------------------
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # counts are idempotent under empty slices
-        counts = (
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return (
             self._bucketize(batch_df)
             .groupBy("cohort", "bucket")
             .agg(F.count("*").cast("long").alias("n_cur"))
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = (
-                state.unionByName(counts)
-                .groupBy("cohort", "bucket")
-                .agg(F.sum("n_cur").cast("long").alias("n_cur"))
-            )
-        self._write_epoch(counts, tag)
+
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.groupBy("cohort", "bucket").agg(
+            F.sum("n_cur").cast("long").alias("n_cur")
+        )
 
     # -- readout -------------------------------------------------------
 

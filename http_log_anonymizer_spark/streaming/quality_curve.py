@@ -29,7 +29,7 @@ from http_log_anonymizer_spark.plans.curation import (
     qf_merge_rollups,
     qf_readout,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 # Page when the deployed cutoff's keep rate collapses below this
 # percent of arrived documents. Exact integer predicate:
@@ -40,23 +40,16 @@ _QF_ALARM_KEEP_PCT = 25
 
 class StreamingQualityCurveMonitor(EpochStateSink):
     """foreachBatch writer accumulating the per-threshold operating
-    curve over (text, ...) rows. Same state/checkpoint contract as the
-    reservoir sink."""
+    curve over (text, ...) rows. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str) -> None:
         self.base_dir = base_dir
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        rollup = qf_curve_rollup(qf_doc_stats(batch_df))
-        state = self._read_state(spark, tag)
-        if state is not None:
-            rollup = qf_merge_rollups(rollup.unionByName(state))
-        self._write_epoch(rollup, tag)
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return qf_curve_rollup(qf_doc_stats(batch_df))
+
+    _merge = staticmethod(qf_merge_rollups)
 
     # -- readout -------------------------------------------------------
 

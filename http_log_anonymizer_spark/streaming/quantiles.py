@@ -8,7 +8,7 @@ mantissa sub-buckets, relative error <= 2^-m), so two histograms merge
 by ADDING counts per bucket — across partitions, micro-batches,
 streams or days. The sink folds each batch with one
 ``groupBy(lb).sum`` against the persisted table, on the
-:class:`~http_log_anonymizer_spark.streaming.reservoir.EpochStateSink`
+:class:`~http_log_anonymizer_spark.streaming.epoch_state.EpochStateSink`
 crash-safe epoch protocol (a replayed batch recomputes from exactly
 the pre-batch epoch, so addition never double-counts).
 
@@ -30,13 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingHdrHistogramSink(EpochStateSink):
     """foreachBatch writer maintaining an HDR histogram (``m`` mantissa
-    bits) over ``value_col`` (non-negative integers). Same
-    state/checkpoint contract as the reservoir sink."""
+    bits) over ``value_col`` (non-negative integers). Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str, m: int = 3, value_col: str = "v") -> None:
         if not 1 <= m <= 8:
@@ -59,23 +59,14 @@ class StreamingHdrHistogramSink(EpochStateSink):
             F.col(self.value_col) < (1 << self.m), F.col(self.value_col)
         ).otherwise(F.expr(f"shiftleft(shiftright({self.value_col}, {sh}), {sh})"))
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # replaying an empty batch is a no-op
-        counts = batch_df.groupBy(self._bucket().alias("lb")).agg(
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(self._bucket().alias("lb")).agg(
             F.count("*").alias("cnt")
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = (
-                counts.unionByName(state)
-                .groupBy("lb")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        self._write_epoch(counts, tag)
+
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.groupBy("lb").agg(F.sum("cnt").alias("cnt"))
 
     # -- readout -------------------------------------------------------
 

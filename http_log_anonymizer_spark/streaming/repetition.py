@@ -34,7 +34,7 @@ from http_log_anonymizer_spark.plans.text import (
     rep_merge_rollups,
     rep_readout,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 # Page when fewer than this percent of a source's documents pass all
 # nine repetition gates. Exact integer predicate:
@@ -44,25 +44,16 @@ _REP_ALARM_KEEP_PCT = 50
 
 class StreamingRepetitionMonitor(EpochStateSink):
     """foreachBatch writer accumulating per-source repetition-filter
-    counters over (source, text) rows. Same state/checkpoint contract
-    as the reservoir sink."""
+    counters over (source, text) rows. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str) -> None:
         self.base_dir = base_dir
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        rollup = rep_cohort_rollup(
-            rep_doc_stats(batch_df.select("source", "text"))
-        )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            rollup = rep_merge_rollups(rollup.unionByName(state))
-        self._write_epoch(rollup, tag)
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return rep_cohort_rollup(rep_doc_stats(batch_df.select("source", "text")))
+
+    _merge = staticmethod(rep_merge_rollups)
 
     # -- readout -------------------------------------------------------
 

@@ -24,102 +24,27 @@ sample is not merely "approximately uniform" — it is bit-identical to
 the backfill sample over the same data, restart or not (asserted in
 tests/test_streaming_reservoir.py).
 
-Crash consistency mirrors ``streaming/neardup.py``: each batch writes
-the full (tiny) reservoir to its own ``_epoch=b{id}`` directory with
-overwrite semantics and reads the NEWEST committed epoch other than its
-own, so a replayed batch recomputes from exactly the pre-batch state
-and overwrites any torn attempt. The previous epoch is only deleted by
-a LATER batch (never by the batch that superseded it), so the
-pre-batch state survives until the checkpoint has durably committed
-the batch that replaced it. State is O(k·groups) rows regardless of
-stream length — at 100 TB/day ingest the epoch rewrite is a constant
-few-kilobyte parquet write per micro-batch.
+State is O(k·groups) rows regardless of stream length — at 100 TB/day
+ingest the epoch rewrite is a constant few-kilobyte parquet write per
+micro-batch. Crash consistency is the epoch protocol of
+``streaming/epoch_state.py``.
 """
 
 from __future__ import annotations
 
-import posixpath
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from http_log_anonymizer_spark.functions.text import hash64
 from http_log_anonymizer_spark.operators.reservoir import partial_topk_prune
-from http_log_anonymizer_spark.streaming.neardup import (
-    _delete_dir,
-    _exists,
-    _subdirs,
-)
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 _PRI = "__pri"
 
 
-def _epoch_id(name: str) -> int:
-    # "_batch=b12" -> 12 (numeric — lexicographic would order b10 < b9)
-    return int(name.split("=b", 1)[1])
-
-
-class EpochStateSink:
-    """Shared machinery for foreachBatch sinks whose ENTIRE state is one
-    small mergeable summary (reservoir, counter sketch): each batch
-    writes the full summary to a fresh ``_batch=b{id}`` epoch directory
-    and reads the newest committed epoch other than its own, so a
-    replayed batch recomputes from exactly the pre-batch state and
-    overwrites any torn attempt. The superseded epoch is deleted only
-    by a LATER batch — the pre-batch state survives until the
-    checkpoint has durably committed the batch that replaced it.
-    Subclasses set ``base_dir`` and implement ``write``."""
-
-    base_dir: str
-
-    def _committed(self, exclude_tag: str) -> list[str]:
-        return sorted(
-            (
-                d
-                for d in _subdirs(self.base_dir)
-                if d != f"_batch={exclude_tag}"
-                and _exists(posixpath.join(self.base_dir, d, "_SUCCESS"))
-            ),
-            key=_epoch_id,
-        )
-
-    def _read_state(self, spark: SparkSession, exclude_tag: str) -> DataFrame | None:
-        done = self._committed(exclude_tag)
-        if not done:
-            return None
-        return spark.read.parquet(posixpath.join(self.base_dir, done[-1]))
-
-    def current(self, spark: SparkSession) -> DataFrame | None:
-        """The summary as of the last committed batch, or None before
-        the first batch."""
-        return self._read_state(spark, exclude_tag="")
-
-    def _housekeep(self, exclude_tag: str) -> None:
-        """Drop superseded epochs and torn garbage: keep the newest
-        committed epoch; everything else (older committed, uncommitted
-        non-in-flight) is dead. The in-flight tag's own dir is left for
-        the overwrite to replace."""
-        done = self._committed(exclude_tag)
-        keep = set(done[-1:]) | {f"_batch={exclude_tag}"}
-        for d in _subdirs(self.base_dir):
-            if d not in keep:
-                _delete_dir(posixpath.join(self.base_dir, d))
-
-    def _write_epoch(self, df: DataFrame, tag: str) -> None:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(self.base_dir, f"_batch={tag}")
-        )
-
-
 class StreamingReservoirSink(EpochStateSink):
     """foreachBatch writer maintaining a deterministic k-per-group
-    reservoir keyed by ``hash64(cast(key_col as string), seed)``.
-
-    ``base_dir`` must be executor-readable (shared filesystem on a
-    cluster). State and the stream's checkpoint are a unit — reusing
-    state with a fresh checkpoint restarts batch ids and is
-    unsupported.
-    """
+    reservoir keyed by ``hash64(cast(key_col as string), seed)``."""
 
     def __init__(
         self,
@@ -135,31 +60,20 @@ class StreamingReservoirSink(EpochStateSink):
         self.group_cols = list(group_cols)
         self.seed = seed
 
-    # -- the sink ------------------------------------------------------
-
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return  # state untouched; replaying an empty batch is a no-op
-        state = self._read_state(spark, tag)
-
-        sort_cols = [_PRI, self.key_col]
-        cols = [c for c in batch_df.columns]
+    def _base(self, batch_df: DataFrame) -> DataFrame:
         b = batch_df.withColumn(
             _PRI, hash64(F.col(self.key_col).cast("string"), self.seed)
         )
-        pruned = partial_topk_prune(b, self.group_cols, self.k, sort_cols)
-        if state is not None:
-            pruned = pruned.unionByName(state.select(*cols, _PRI))
-        merged = pruned.dropDuplicates([*self.group_cols, self.key_col])
+        return partial_topk_prune(b, self.group_cols, self.k, [_PRI, self.key_col])
+
+    def _merge(self, states: DataFrame) -> DataFrame:
+        merged = states.dropDuplicates([*self.group_cols, self.key_col])
+        sort_cols = [_PRI, self.key_col]
         w = (
             Window.partitionBy(*self.group_cols).orderBy(*sort_cols)
             if self.group_cols
             else Window.orderBy(*sort_cols)
         )
-        sample = merged.select("*", F.row_number().over(w).alias("rnk")).filter(
+        return merged.select("*", F.row_number().over(w).alias("rnk")).filter(
             F.col("rnk") <= self.k
         )
-        self._write_epoch(sample, tag)

@@ -32,41 +32,30 @@ from http_log_anonymizer_spark.plans.similarity import (
     spectrum_from_moments,
     spectrum_moments,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingSpectrumMonitor(EpochStateSink):
     """foreachBatch writer accumulating per-dimension moments of an
-    ``embedding`` array column. Same state/checkpoint contract as the
-    reservoir sink."""
+    ``embedding`` array column. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str, embedding_col: str = "embedding") -> None:
         self.base_dir = base_dir
         self.embedding_col = embedding_col
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        moments = spectrum_moments(
-            batch_df.select(
-                F.posexplode(self.embedding_col).alias("dim", "val")
-            )
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return spectrum_moments(
+            batch_df.select(F.posexplode(self.embedding_col).alias("dim", "val"))
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            moments = (
-                moments.unionByName(state)
-                .groupBy("dim")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("s1").cast("decimal(38,0)").alias("s1"),
-                    F.sum("s2").cast("decimal(38,0)").alias("s2"),
-                )
-            )
-        self._write_epoch(moments, tag)
+
+    @staticmethod
+    def _merge(states: DataFrame) -> DataFrame:
+        return states.groupBy("dim").agg(
+            F.sum("n").cast("long").alias("n"),
+            F.sum("s1").cast("decimal(38,0)").alias("s1"),
+            F.sum("s2").cast("decimal(38,0)").alias("s2"),
+        )
 
     # -- readout -------------------------------------------------------
 

@@ -34,14 +34,14 @@ from http_log_anonymizer_spark.plans.http_log import (
     observed_base,
     storage_grid,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingStorageMonitor(EpochStateSink):
     """foreachBatch writer accumulating the capacity base over
     (timestamp, remote_addr, url, ...) rows — the anonymized http_log
-    stream the ClickHouse sink writes. Same state/checkpoint contract
-    as the reservoir sink.
+    stream the ClickHouse sink writes. Epoch protocol:
+    ``streaming/epoch_state.py``.
 
     ``retention_days`` and ``disk_budget_bytes`` configure the alarm:
     page when the projection AT THE OBSERVED RATE for the configured
@@ -74,18 +74,6 @@ class StreamingStorageMonitor(EpochStateSink):
             F.min("min_us").alias("min_us"),
             F.max("max_us").alias("max_us"),
         )
-
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        base = self._base(batch_df)
-        state = self._read_state(spark, tag)
-        if state is not None:
-            base = self._merge(base.unionByName(state))
-        self._write_epoch(base, tag)
 
     # -- readouts ------------------------------------------------------
 

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 _TVD_BUCKETS = 10
 
@@ -35,8 +35,8 @@ _TVD_BUCKETS = 10
 class StreamingTClosenessMonitor(EpochStateSink):
     """foreachBatch writer maintaining (qi..., sensitive, c) counts;
     threshold t = num/den rational, matching the batch query's exact
-    integer arithmetic. Same state/checkpoint contract as the
-    reservoir sink."""
+    integer arithmetic. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(
         self,
@@ -52,25 +52,17 @@ class StreamingTClosenessMonitor(EpochStateSink):
         self.sensitive_col = sensitive_col
         self.dedup_key = dedup_key
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
+    def _base(self, batch_df: DataFrame) -> DataFrame:
         if self.dedup_key is not None:
             batch_df = batch_df.dropDuplicates([self.dedup_key])
-        counts = batch_df.groupBy(*self.qi_cols, self.sensitive_col).agg(
+        return batch_df.groupBy(*self.qi_cols, self.sensitive_col).agg(
             F.count("*").cast("long").alias("c")
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            counts = (
-                counts.unionByName(state)
-                .groupBy(*self.qi_cols, self.sensitive_col)
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-        self._write_epoch(counts, tag)
+
+    def _merge(self, states: DataFrame) -> DataFrame:
+        return states.groupBy(*self.qi_cols, self.sensitive_col).agg(
+            F.sum("c").cast("long").alias("c")
+        )
 
     # -- readout -------------------------------------------------------
 

@@ -36,30 +36,23 @@ from http_log_anonymizer_spark.plans.text import (
     wm_merge_rollups,
     wm_readout,
 )
-from http_log_anonymizer_spark.streaming.reservoir import EpochStateSink
+from http_log_anonymizer_spark.streaming.epoch_state import EpochStateSink
 
 
 class StreamingWatermarkMonitor(EpochStateSink):
     """foreachBatch writer accumulating per-source greenlist evidence
-    over (source, doc_id, text) rows. Same state/checkpoint contract
-    as the reservoir sink."""
+    over (source, doc_id, text) rows. Epoch protocol:
+    ``streaming/epoch_state.py``."""
 
     def __init__(self, base_dir: str) -> None:
         self.base_dir = base_dir
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        self._housekeep(tag)
-        if batch_df.isEmpty():
-            return
-        rollup = wm_cohort_rollup(
+    def _base(self, batch_df: DataFrame) -> DataFrame:
+        return wm_cohort_rollup(
             wm_doc_stats(batch_df.select("source", "doc_id", "text"))
         )
-        state = self._read_state(spark, tag)
-        if state is not None:
-            rollup = wm_merge_rollups(rollup.unionByName(state))
-        self._write_epoch(rollup, tag)
+
+    _merge = staticmethod(wm_merge_rollups)
 
     # -- readout -------------------------------------------------------
 

@@ -106,7 +106,7 @@ def test_torn_epoch_and_gc(spark, tmp_path):
     assert _state(spark, sink) == _batch_registers(spark, b0 + b1 + b2)
 
     # epochs are garbage-collected: newest committed + in-flight only
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     assert len(_subdirs(str(base))) <= 2
 

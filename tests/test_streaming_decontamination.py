@@ -71,7 +71,9 @@ def test_redelivery_and_boundaries_do_not_change_the_table(spark, tmp_path):
     many = StreamingDecontaminationMonitor(
         str(tmp_path / "many"), str(tmp_path)
     )
-    many.write(d.filter(F.col("doc_id") <= 1), 0)
+    first = d.filter(F.col("doc_id") <= 1)
+    # doc 1 delivered twice inside one batch
+    many.write(first.unionByName(first.filter(F.col("doc_id") == 1)), 0)
     many.write(d, 1)  # full redelivery: doc 1 already in state
     many.write(d.filter(F.lit(False)), 2)  # empty slice
     assert [tuple(r) for r in one.report(spark).collect()] == [

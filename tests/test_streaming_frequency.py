@@ -113,7 +113,7 @@ def test_torn_epoch_repair_and_gc(spark, tmp_path):
     sink.write(_bdf(spark, b2), 2)
     assert _state(spark, sink) == _batch_counters(spark, b0 + b1 + b2)
 
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     assert len(_subdirs(str(base))) <= 2
 

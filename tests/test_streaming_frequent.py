@@ -95,7 +95,7 @@ def test_restart_and_torn_epoch(spark, tmp_path):
     assert _state(spark, sink) == _reference_fold([b0, b1, b2], m)
 
     # epochs are garbage-collected
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     assert len(_subdirs(str(base))) <= 2
 

@@ -72,7 +72,7 @@ def test_replay_and_torn_epoch_no_double_count(spark, tmp_path):
     mon.write(_bdf(spark, b2), 2)
     assert _state(spark, mon) == dict(collections.Counter(b0 + b1 + b2))
 
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     assert len(_subdirs(str(base))) <= 2
 

@@ -75,7 +75,7 @@ def test_replay_duplicate_delivery_and_torn_epoch(spark, tmp_path):
     sink.write(_bdf(spark, b1), 2)
     assert _state(spark, sink) == clean
 
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     assert len(_subdirs(str(base))) <= 2
 

@@ -146,7 +146,7 @@ def test_long_stream_compaction_bounds_state_files(spark, tmp_path):
     micro-batches exercise BOTH compaction tiers (b->c folds and the
     c->c refold) and end with a bounded number of state partitions and
     the SAME accept/drop decisions as an uncompacted sink."""
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     rng = random.Random(11)
     base = tmp_path / "state"
@@ -272,7 +272,7 @@ def test_geometric_compaction_fold_cost_is_tier_bounded(spark, tmp_path):
     therefore O(N log N) instead of O(N^2 / ce^2)."""
     import posixpath
 
-    from http_log_anonymizer_spark.streaming.neardup import (
+    from http_log_anonymizer_spark.streaming.epoch_state import (
         PartitionedStateSink,
         _subdirs,
     )

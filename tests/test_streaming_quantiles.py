@@ -83,7 +83,7 @@ def test_replay_and_torn_epoch(spark, tmp_path):
     sink.write(_bdf(spark, b2), 2)
     assert _state(spark, sink) == _ref_hist(b0 + b1 + b2, 3)
 
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     assert len(_subdirs(str(base))) <= 2
 

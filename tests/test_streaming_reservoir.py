@@ -108,7 +108,7 @@ def test_torn_epoch_write_is_repaired_by_replay(spark, tmp_path):
 
 
 def test_empty_batch_and_bounded_state_dirs(spark, tmp_path):
-    from http_log_anonymizer_spark.streaming.neardup import _subdirs
+    from http_log_anonymizer_spark.streaming.epoch_state import _subdirs
 
     base = tmp_path / "state"
     sink = StreamingReservoirSink(str(base), k=4, group_cols=())
