@@ -57,15 +57,6 @@ def _real_decode(payload: bytes) -> tuple[int, int, str]:  # pragma: no cover
     return img.width, img.height, (img.format or "unknown").lower()
 
 
-def fake_decode(n_bytes: int) -> tuple[int, int, str]:
-    """Deterministic fake decode from payload length (pure integer
-    arithmetic — mirrored by the SQL oracle in plans/multimodal.py)."""
-    width = n_bytes % 640 + 1
-    height = (n_bytes * 7) % 480 + 1
-    fmt = _FORMATS[n_bytes % 3]
-    return width, height, fmt
-
-
 def decode_media_meta(df: DataFrame) -> DataFrame:
     """mapInPandas decode of a (doc_id, source, data binary) DataFrame
     into typed media metadata. Batch shape: pandas DataFrames of Arrow

@@ -45,14 +45,6 @@ def dot_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def norm_sql(a: str, dim: int) -> str:
-    return f"sqrt(list_sum(list_transform(generate_series(1, {dim}), i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE))))"
-
-
-def cosine_sql(a: str, b: str, dim: int) -> str:
-    return f"({dot_sql(a, b, dim)} / ({norm_sql(a, dim)} * {norm_sql(b, dim)}))"
-
-
 def norm_column(vec_col: Column | str) -> Column:
     """Materializable norm — same as :func:`norm`, exported for the
     two-projection unit-vector pattern (compute norm in one projection,

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -48,7 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from http_log_anonymizer_spark.operators.topk import _round_half_away
+from http_log_anonymizer_spark.operators.topk import _round_half_away, rank_neighbors
 
 _PROBE_SCHEMA = StructType(
     [
@@ -170,14 +170,11 @@ def ivf_scan_topk(
         .cogroup(probed.select("label", "query_id", "qe").groupBy("label"))
         .applyInPandas(scan, _SCAN_SCHEMA)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
+    return rank_neighbors(
         partial.select(
             "query_id",
             "neighbor_id",
             F.round("cos_raw", round_decimals).alias("cos"),
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+        ),
+        k,
+    ).orderBy("query_id", "rank")

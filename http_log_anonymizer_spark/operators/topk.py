@@ -67,6 +67,18 @@ def _round_half_away(x: np.ndarray, decimals: int) -> np.ndarray:
     return np.where(x >= 0, np.floor(x * p + 0.5), np.ceil(x * p - 0.5)) / p
 
 
+def rank_neighbors(scored: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """Rows of ``scored`` whose per-query ``rank`` is at most ``k``: the
+    one neighbour-ranking rule of every top-k tier. ``rank`` is the
+    row_number over ``score`` desc, ``neighbor_id`` asc within each
+    ``query_id``, so ties on the rounded score resolve the same way in
+    Spark and in the SQL oracles."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), "neighbor_id")
+    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
+        F.col("rank") <= k
+    )
+
+
 def brute_topk(
     units: DataFrame,
     queries: DataFrame,
@@ -191,16 +203,13 @@ def brute_topk(
                 }
             )
 
-    cand = units.mapInPandas(gen, _CAND_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+    cand = units.mapInPandas(gen, _CAND_SCHEMA).select(
+        "query_id",
+        "neighbor_id",
+        F.round("cos_raw", round_decimals).alias("cos"),
+    )
     return (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", round_decimals).alias("cos"),
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
+        rank_neighbors(cand, k)
         .select("query_id", "neighbor_id", "rank", "cos")
         .orderBy("query_id", "rank")
     )

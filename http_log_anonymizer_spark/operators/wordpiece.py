@@ -204,10 +204,3 @@ def wordpiece_merges_sql(k: int, token_sql: str) -> str:
         for s in range(k)
     )
     return "WITH RECURSIVE\n" + _wp_ctes(k, token_sql) + f"\n{union}\nORDER BY step"
-
-
-def wordpiece_vocab_sql(k: int, token_sql: str) -> str:
-    """DuckDB CTE prefix (caller appends its own final SELECT) exposing
-    ``v{k}`` — the vocabulary AFTER the first ``k`` learned WordPiece
-    merges. Already starts with WITH RECURSIVE."""
-    return "WITH RECURSIVE\n" + _wp_ctes(k, token_sql)

@@ -25,6 +25,7 @@ identical constants.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,6 +40,7 @@ from http_log_anonymizer_spark.functions.vectors import (
     unit_from,
 )
 from http_log_anonymizer_spark.operators.materialize import pin
+from http_log_anonymizer_spark.operators.topk import brute_topk, rank_neighbors
 from http_log_anonymizer_spark.plans.registry import ScaleGate, register
 from http_log_anonymizer_spark.sources.batch import load_table
 
@@ -165,31 +167,161 @@ def _bucket_sql(vec: str, planes: list[list[float]] | None = None) -> str:
 
 
 # ---------------------------------------------------------------------------
+# The ANN evaluation protocol, written once. Every tier searches for the
+# same fixed query sample and ranks neighbours by operators/topk.py's
+# rule; every recall audit scores a tier's top-k against the same exact
+# ground truth. Each decision has one Spark definition and one SQL twin.
+# ---------------------------------------------------------------------------
+
+_SAMPLE_SQL = "vec_id % 100 = 0"  # SQL twin of _queries' sample
+
+
+def _queries(df: DataFrame, *cols, rotate: bool = False) -> DataFrame:
+    """(query_id, *cols): the fixed ANN query sample of ``df`` — every
+    row with vec_id % 100 == 0 (1% of the corpus), keyed as query_id.
+    ``rotate=True`` passes the sampled (vec_id, embedding) rows through
+    the OPQ rotation before ``cols`` are taken."""
+    s = df.filter(F.col("vec_id") % 100 == 0)
+    if rotate:
+        s = _opq_rotate(s.select("vec_id", "embedding"))
+    return s.select(F.col("vec_id").alias("query_id"), *cols)
+
+
+def _rank_sql(score: str) -> str:
+    """SQL twin of operators/topk.py:rank_neighbors; the caller keeps
+    rank <= k."""
+    return (
+        "SELECT *, row_number() OVER (\n"
+        f"    PARTITION BY query_id ORDER BY {score} DESC, neighbor_id\n"
+        "  ) AS rank"
+    )
+
+
+def _exact_topk(u: DataFrame, cache_key: str) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos): exact top-{_TOPK} of the
+    query sample of a (vec_id, ue) unit table, on operators/topk.py."""
+    return brute_topk(
+        u, _queries(u, F.col("ue").alias("qe")), k=_TOPK, cache_key=cache_key
+    )
+
+
+def _ground_truth(spark: SparkSession, sf_dir: str, rotate: bool = False) -> DataFrame:
+    """The exact ground truth every recall audit scores against (and the
+    result of ann_brute_topk). ``rotate=True`` searches the OPQ-rotated
+    corpus, for tiers that search in the rotated space."""
+    u = _unit_table(spark, sf_dir, cache=False, rotate=rotate)
+    return _exact_topk(u, f"annq{'rot' if rotate else ''}|{sf_dir}")
+
+
+# SQL twin of _ground_truth: q (query_id, qe) and unit come from the caller
+_TRUTH_SQL = f"""bscored AS (
+  SELECT q.query_id, c.vec_id AS neighbor_id,
+         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
+  FROM q JOIN unit c ON c.vec_id <> q.query_id
+),
+branked AS (
+  {_rank_sql('cos')} FROM bscored
+)"""
+_Q_SQL = f"q AS (SELECT vec_id AS query_id, ue AS qe FROM unit WHERE {_SAMPLE_SQL})"
+
+
+def _recall_at_k(truth: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, k, n_hits, recall): how many of each query's exact
+    top-{_TOPK} neighbours an approximate top-{_TOPK} also returns. Both
+    rankings are deterministic (rounded score + neighbour-id tie-break),
+    so the overlap is too; the join is queries x k rows."""
+    b = truth.select("query_id", "neighbor_id").alias("b")
+    s = approx.select("query_id", "neighbor_id").alias("s")
+    hits = (
+        b.join(
+            s,
+            (F.col("s.query_id") == F.col("b.query_id"))
+            & (F.col("s.neighbor_id") == F.col("b.neighbor_id")),
+            "left",
+        )
+        .groupBy(F.col("b.query_id").alias("query_id"))
+        .agg(F.count(F.col("s.neighbor_id")).alias("n_hits"))
+    )
+    return hits.select(
+        "query_id",
+        F.lit(_TOPK).alias("k"),
+        F.col("n_hits").cast("long").alias("n_hits"),
+        F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
+    )
+
+
+def _recall_report(
+    spark: SparkSession,
+    sf_dir: str,
+    tier: Callable[[SparkSession, str], DataFrame],
+    rotate: bool = False,
+) -> DataFrame:
+    """Per-query recall@{_TOPK} of a registered top-k ``tier`` against
+    the exact ground truth (built first, on the query shards the other
+    audits share)."""
+    truth = _ground_truth(spark, sf_dir, rotate)
+    return _recall_at_k(truth, tier(spark, sf_dir)).orderBy("query_id")
+
+
+def _recall_sql(ctes: str, ranked: dict[int | None, str]) -> str:
+    """Oracle of a recall report. ``ctes`` define ``unit``, the query
+    sample ``q`` (query_id, qe) and the approximate tier's ranked CTEs;
+    ``ranked`` maps each truncation dim to its ranked CTE (None: one
+    tier, no ``trunc_dim`` column)."""
+    hits = ",\n".join(
+        f"""hits{d or ''} AS (
+  SELECT b.query_id, count(s.neighbor_id) AS n_hits
+  FROM branked b LEFT JOIN {r} s
+    ON s.query_id = b.query_id AND s.neighbor_id = b.neighbor_id
+   AND s.rank <= {_TOPK}
+  WHERE b.rank <= {_TOPK}
+  GROUP BY b.query_id
+)"""
+        for d, r in ranked.items()
+    )
+    reads = "\nUNION ALL\n".join(
+        f"""SELECT {f'{d} AS trunc_dim, ' if d else ''}query_id, {_TOPK} AS k,
+       CAST(n_hits AS BIGINT) AS n_hits,
+       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
+FROM hits{d or ''}"""
+        for d in ranked
+    )
+    order = "query_id" if None in ranked else "trunc_dim, query_id"
+    return f"""
+WITH {ctes},
+{_TRUTH_SQL},
+{hits}
+{reads}
+ORDER BY {order}
+"""
+
+
+def _audit_gate(wide_twin: str) -> ScaleGate:
+    """Scale gate of a ground-truth audit: the brute side is quadratic
+    BY DESIGN (an audit artifact)."""
+    return ScaleGate(
+        table="embeddings",
+        max_rows=250_000,
+        wide_twin=wide_twin,
+        advice=(
+            "Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute"
+            " side is the cost, and recall estimates need only a sample)."
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
 
 
 @register(
     "ann_brute_topk",
     # exact ground truth: queries x corpus = n^2/100 dot products (369 s measured at 200k; ~10h at 2M)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_ivf_sqrt_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
-    ),
+    scale_gate=_audit_gate("ann_ivf_sqrt_topk"),
     oracle=f"""
 WITH {UNIT_CTE_SQL},
-q AS (SELECT vec_id AS query_id, ue AS qe FROM unit WHERE vec_id % 100 = 0),
-scored AS (
-  SELECT
-    q.query_id,
-    c.vec_id AS neighbor_id,
-    round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, cos FROM ranked WHERE rank <= {_TOPK}
+{_Q_SQL},
+{_TRUTH_SQL}
+SELECT query_id, neighbor_id, rank, cos FROM branked WHERE rank <= {_TOPK}
 ORDER BY query_id, rank
 """,
     bench=True,
@@ -206,14 +338,9 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. Replaces the interpreted fold + full corpus-x-queries rank
     window that cost 32 s at sf1 (r03 bench; now ~1 s). Ranking uses
     the rounded cosine with neighbor-id tie-break so order is
-    reproducible across engines."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    return brute_topk(u, q, k=_TOPK, cache_key=f"annq|{sf_dir}")
+    reproducible across engines. This is the ground truth every recall
+    report scores against."""
+    return _ground_truth(spark, sf_dir)
 
 
 @register(
@@ -228,7 +355,7 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH {UNIT_CTE_SQL},
 b AS (SELECT vec_id, ue, {_bucket_sql('embedding')} AS bucket FROM unit),
-q AS (SELECT vec_id AS query_id, ue AS qe, bucket AS qbucket FROM b WHERE vec_id % 100 = 0),
+q AS (SELECT vec_id AS query_id, ue AS qe, bucket AS qbucket FROM b WHERE {_SAMPLE_SQL}),
 scored AS (
   SELECT
     q.query_id,
@@ -237,9 +364,7 @@ scored AS (
   FROM q JOIN b c ON c.bucket = q.qbucket AND c.vec_id <> q.query_id
 ),
 ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank
+  {_rank_sql('cos')}
   FROM scored
 )
 SELECT query_id, neighbor_id, rank, cos FROM ranked WHERE rank <= {_TOPK}
@@ -276,11 +401,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bucket_spark("embedding").alias("bucket"),
     ).cache()
     b.count()  # eager build before probe+query scans
-    q = b.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("ue").alias("qe"),
-        F.col("bucket").alias("qbucket"),
-    )
+    q = _queries(b, F.col("ue").alias("qe"), F.col("bucket").alias("qbucket"))
     scored = (
         b.join(q, F.col("bucket") == F.col("qbucket"))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -290,12 +411,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot("qe", "ue"), 4).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK).orderBy("query_id", "rank")
 
 
 @register(
@@ -660,7 +776,7 @@ WITH {UNIT_CTE_SQL},
 {_CENT_CTE},
 q AS (
   SELECT vec_id AS query_id, embedding AS qemb, ue AS qe
-  FROM unit WHERE vec_id % 100 = 0
+  FROM unit WHERE {_SAMPLE_SQL}
 ),
 qd AS (
   SELECT q.query_id, cv.label,
@@ -686,9 +802,7 @@ scored AS (
   JOIN unit c ON c.label = p.label AND c.vec_id <> q.query_id
 ),
 ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank FROM scored
+  {_rank_sql('cos')} FROM scored
 )
 SELECT query_id, neighbor_id, rank, cos FROM ranked WHERE rank <= {_TOPK}
 ORDER BY query_id, rank
@@ -725,9 +839,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     u.count()  # eager: probed by queries and candidates below
 
     cv = _centroid_arrays(e)
-    qsrc = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0)
-    q = qsrc.select(
-        F.col("vec_id").alias("query_id"),
+    q = _queries(
+        load_table(spark, sf_dir, "embeddings"),
         F.col("embedding").cast("array<double>").alias("qemb"),
         norm_column("embedding").alias("qnrm"),
     ).select("query_id", "qemb", unit_from("qemb", "qnrm").alias("qe"))
@@ -741,12 +854,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot("qe", "ue"), 4).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK).orderBy("query_id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -830,7 +938,7 @@ def embed_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     oracle=f"""
 WITH {_QUANT_CTE},
-q AS (SELECT vec_id AS query_id, qv AS qq FROM q8 WHERE vec_id % 100 = 0),
+q AS (SELECT vec_id AS query_id, qv AS qq FROM q8 WHERE {_SAMPLE_SQL}),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
          CAST(list_sum(list_transform(generate_series(1, {_DIM}),
@@ -838,9 +946,7 @@ scored AS (
   FROM q JOIN q8 c ON c.vec_id <> q.query_id
 ),
 ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY dot_q DESC, neighbor_id
-  ) AS rank FROM scored
+  {_rank_sql('dot_q')} FROM scored
 )
 SELECT query_id, neighbor_id, rank, dot_q FROM ranked WHERE rank <= {_TOPK}
 ORDER BY query_id, rank
@@ -854,9 +960,7 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ann_brute_topk) for final ordering."""
     q8 = _quantized(spark, sf_dir).cache()
     q8.count()  # eager build before probe+query scans
-    q = q8.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
-    )
+    q = _queries(q8, F.col("qv").alias("qq"))
     dot_q = F.aggregate(
         F.zip_with("qq", "qv", lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -866,12 +970,7 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         q8.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), dot_q.alias("dot_q"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_q"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK, "dot_q").orderBy("query_id", "rank")
 
 
 @register(
@@ -885,7 +984,7 @@ WITH {_CENT_CTE},
 {_QUANT_CTE},
 q AS (
   SELECT vec_id AS query_id, embedding AS qemb
-  FROM embeddings WHERE embedding IS NOT NULL AND vec_id % 100 = 0
+  FROM embeddings WHERE embedding IS NOT NULL AND {_SAMPLE_SQL}
 ),
 qd AS (
   SELECT q.query_id, cv.label,
@@ -912,9 +1011,7 @@ scored AS (
   JOIN q8 c ON c.label = p.label AND c.vec_id <> q.query_id
 ),
 ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY adc DESC, neighbor_id
-  ) AS rank FROM scored
+  {_rank_sql('adc')} FROM scored
 )
 SELECT query_id, neighbor_id, rank, adc FROM ranked WHERE rank <= {_TOPK}
 ORDER BY query_id, rank
@@ -938,10 +1035,7 @@ def ann_ivf_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q8.count()  # eager: candidate side, probed per query cell
 
     cv = _centroid_arrays(e)
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    )
+    q = _queries(e, F.col("embedding").cast("array<double>").alias("qemb"))
     probed = _probe_cells(q, cv, _NPROBE)
     adc = F.round(
         F.aggregate(
@@ -956,12 +1050,7 @@ def ann_ivf_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK, "adc").orderBy("query_id", "rank")
 
 
 @register(
@@ -1208,7 +1297,7 @@ WITH {UNIT_CTE_SQL},
 {_km_ctes()},
 q AS (
   SELECT vec_id AS query_id, embedding AS qemb, ue AS qe
-  FROM unit WHERE vec_id % 100 = 0
+  FROM unit WHERE {_SAMPLE_SQL}
 ),
 kqd AS (
   SELECT q.query_id, c.cluster AS label,
@@ -1235,9 +1324,7 @@ kscored AS (
   JOIN unit u ON u.vec_id = a.vec_id AND u.vec_id <> q.query_id
 ),
 kranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank FROM kscored
+  {_rank_sql('cos')} FROM kscored
 )
 SELECT query_id, neighbor_id, rank, cos FROM kranked WHERE rank <= {_TOPK}
 ORDER BY query_id, rank
@@ -1271,8 +1358,8 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     u.count()  # eager: probed by queries and candidates below
 
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
+    q = _queries(
+        u,
         F.col("embedding").cast("array<double>").alias("qemb"),
         F.col("ue").alias("qe"),
     )
@@ -1286,12 +1373,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot("qe", "ue"), 4).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK).orderBy("query_id", "rank")
 
 
 # sqrt-scaled IVF tier (VERDICT r04 item 2): cell count grows with the
@@ -1354,7 +1436,7 @@ def _sqrt_search_ctes() -> str:
     the registered recall report."""
     return f"""q AS (
   SELECT vec_id AS query_id, embedding AS qemb, ue AS qe
-  FROM unit WHERE vec_id % 100 = 0
+  FROM unit WHERE {_SAMPLE_SQL}
 ),
 kqd AS (
   SELECT q.query_id, c.cluster AS label,
@@ -1381,9 +1463,7 @@ kscored AS (
   JOIN unit u ON u.vec_id = a.vec_id AND u.vec_id <> q.query_id
 ),
 kranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank FROM kscored
+  {_rank_sql('cos')} FROM kscored
 )"""
 
 
@@ -1456,9 +1536,8 @@ def ann_ivf_sqrt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(assignments.select("vec_id", F.col("cluster").alias("label")), "vec_id")
     )
 
-    qsrc = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0)
-    q = qsrc.select(
-        F.col("vec_id").alias("query_id"),
+    q = _queries(
+        load_table(spark, sf_dir, "embeddings"),
         F.col("embedding").cast("array<double>").alias("qemb"),
         norm_column("embedding").alias("qnrm"),
     ).select("query_id", "qemb", unit_from("qemb", "qnrm").alias("qe"))
@@ -1625,7 +1704,7 @@ codes AS MATERIALIZED (
 ),
 q AS (
   SELECT vec_id AS query_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qemb
-  FROM {src} WHERE embedding IS NOT NULL AND vec_id % 100 = 0
+  FROM {src} WHERE embedding IS NOT NULL AND {_SAMPLE_SQL}
 ),
 kqd AS (
   SELECT q.query_id, q.qemb, c.cluster AS label,
@@ -1656,9 +1735,7 @@ scored AS (
   {lut_joins}
 ),
 kranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY adc DESC, neighbor_id
-  ) AS rank FROM scored
+  {_rank_sql('adc')} FROM scored
 )
 SELECT query_id, neighbor_id, rank, adc FROM kranked WHERE rank <= {_TOPK}
 ORDER BY query_id, rank
@@ -1730,12 +1807,10 @@ def _pq_impl(
         for m in range(_PQ_M)
     ]
 
-    qsrc = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0)
-    if rotate:
-        qsrc = _opq_rotate(qsrc.select("vec_id", "embedding"))
-    q = qsrc.select(
-        F.col("vec_id").alias("query_id"),
+    q = _queries(
+        load_table(spark, sf_dir, "embeddings"),
         F.col("embedding").cast("array<double>").alias("qemb"),
+        rotate=rotate,
     )
     probed = _probe_cells(q, cv, _PQ_NPROBE)
     probed = probed.join(F.broadcast(cv), "label").select(
@@ -1754,12 +1829,7 @@ def _pq_impl(
         F.col("vec_id").alias("neighbor_id"),
         F.round(subtotal, 4).alias("adc"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK, "adc").orderBy("query_id", "rank")
 
 
 @register(
@@ -1957,7 +2027,7 @@ def ivf_residual_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {UNIT_CTE_SQL},
 q AS (
   SELECT vec_id AS query_id, label AS qlabel, ue AS qe
-  FROM unit WHERE vec_id % 100 = 0
+  FROM unit WHERE {_SAMPLE_SQL}
 ),
 scored AS (
   SELECT
@@ -1968,9 +2038,7 @@ scored AS (
   FROM q JOIN unit c ON c.vec_id <> q.query_id AND c.label <> q.qlabel
 ),
 ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank
+  {_rank_sql('cos')}
   FROM scored
 )
 SELECT query_id, neighbor_id, neg_label, rank, cos
@@ -1987,8 +2055,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusion pushed into the scoring kernel (fold-order-exact numpy,
     per-partition partial top-k — see ann_brute_topk), so the corpus
     never shuffles and the oracle hash-matches bit-for-bit."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
     # an UNLABELED vector cannot be certified as a negative (and a
     # query without a label has no class to contrast against) — the
     # oracle's c.label <> q.qlabel excludes NULLs by three-valued
@@ -1998,11 +2064,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = _unit_table(spark, sf_dir, extra=["label"], cache=False).filter(
         F.col("label").isNotNull()
     )
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("ue").alias("qe"),
-        F.col("label").alias("xlabel"),
-    )
+    q = _queries(u, F.col("ue").alias("qe"), F.col("label").alias("xlabel"))
     top = brute_topk(
         u, q, k=_TOPK, exclude_label=True, cache_key=f"annq_lab|{sf_dir}"
     )
@@ -2031,96 +2093,37 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_lsh_recall_report",
-    # the ground-truth side is brute-force BY DESIGN (audit artifact)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_lsh_wide_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
-    ),
-    oracle=f"""
-WITH {UNIT_CTE_SQL},
-q AS (SELECT vec_id AS query_id, ue AS qe FROM unit WHERE vec_id % 100 = 0),
-bscored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM bscored
-  ) WHERE rank <= {_TOPK}
-),
+    scale_gate=_audit_gate("ann_lsh_wide_topk"),
+    oracle=_recall_sql(
+        f"""{UNIT_CTE_SQL},
+{_Q_SQL},
 bk AS (SELECT vec_id, ue, {_bucket_sql('embedding')} AS bucket FROM unit),
 qb AS (
   SELECT vec_id AS query_id, ue AS qe, bucket AS qbucket
-  FROM bk WHERE vec_id % 100 = 0
+  FROM bk WHERE {_SAMPLE_SQL}
 ),
 lscored AS (
   SELECT qb.query_id, c.vec_id AS neighbor_id,
          round({dot_sql('qb.qe', 'c.ue', _DIM)}, 4) AS cos
   FROM qb JOIN bk c ON c.bucket = qb.qbucket AND c.vec_id <> qb.query_id
 ),
-ltop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM lscored
-  ) WHERE rank <= {_TOPK}
-),
-hits AS (
-  SELECT b.query_id, count(l.neighbor_id) AS n_hits
-  FROM btop b LEFT JOIN ltop l
-    ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-  GROUP BY b.query_id
-)
-SELECT query_id,
-       {_TOPK} AS k,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
-FROM hits
-ORDER BY query_id
-""",
+lranked AS (
+  {_rank_sql('cos')} FROM lscored
+)""",
+        {None: "lranked"},
+    ),
 )
 def ann_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@{_TOPK} of the LSH index against exact brute
-    force, as a REGISTERED artifact: both rankings are deterministic
-    (rounded-cos + id tie-breaks), so the accuracy claim itself is
+    force, as a REGISTERED artifact: the accuracy claim itself is
     driver-hash-checked instead of living only in a local test — the
     index-quality report an ANN deployment publishes next to its
     latency numbers.
 
-    Scale shape: the brute side runs on operators/topk.py (partial
-    top-k, corpus streams once); the LSH side is the bucket equi-join
-    of ann_lsh_topk; the comparison joins two queries x k row sets —
-    negligible. This is 'measure the index on the corpus it serves',
-    not a second index build."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    btop = brute_topk(u, q, k=_TOPK, cache_key=f"annq|{sf_dir}").select(
-        "query_id", "neighbor_id"
-    )
-    ltop = ann_lsh_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        btop.alias("b")
-        .join(
-            ltop.alias("l"),
-            (F.col("l.query_id") == F.col("b.query_id"))
-            & (F.col("l.neighbor_id") == F.col("b.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(F.count(F.col("l.neighbor_id")).alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(_TOPK).alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
-    ).orderBy("query_id")
+    Scale shape: the LSH side is the bucket equi-join of ann_lsh_topk.
+    This is 'measure the index on the corpus it serves', not a second
+    index build."""
+    return _recall_report(spark, sf_dir, ann_lsh_topk)
 
 
 # ---------------------------------------------------------------------------
@@ -2156,7 +2159,7 @@ _WIDE_KEYS_SQL = " UNION ALL ".join(
 WITH {UNIT_CTE_SQL},
 wbk AS MATERIALIZED (SELECT vec_id, ue, {_WIDE_BUCKET_COLS_SQL} FROM unit),
 k AS MATERIALIZED ({_WIDE_KEYS_SQL}),
-q AS (SELECT vec_id AS query_id, t, bucket FROM k WHERE vec_id % 100 = 0),
+q AS (SELECT vec_id AS query_id, t, bucket FROM k WHERE {_SAMPLE_SQL}),
 cand AS (
   SELECT q.query_id, c.vec_id AS neighbor_id
   FROM q JOIN k c
@@ -2171,9 +2174,7 @@ scored AS (
   JOIN wbk ne ON ne.vec_id = c.neighbor_id
 ),
 ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank FROM scored
+  {_rank_sql('cos')} FROM scored
 )
 SELECT query_id, neighbor_id, rank, cos FROM ranked WHERE rank <= {_TOPK}
 ORDER BY query_id, rank
@@ -2227,12 +2228,8 @@ def ann_lsh_wide_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
     base.count()  # eager: query and corpus sides both probe this index
     k = base.select("vec_id", "ue", "bks", F.posexplode("bks").alias("t", "bucket"))
-    q = k.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("ue").alias("qe"),
-        F.col("bks").alias("qbks"),
-        "t",
-        "bucket",
+    q = _queries(
+        k, F.col("ue").alias("qe"), F.col("bks").alias("qbks"), "t", "bucket"
     )
     first_match = F.array_position(
         F.zip_with("qbks", "bks", lambda x, y: x == y), F.lit(True)
@@ -2247,12 +2244,7 @@ def ann_lsh_wide_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot("qe", "ue"), 4).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK).orderBy("query_id", "rank")
 
 
 def _pca_oracle() -> str:
@@ -2298,42 +2290,13 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_sqrt_recall_report",
-    # the ground-truth side is brute-force BY DESIGN (audit artifact)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_ivf_sqrt_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
-    ),
-    oracle=f"""
-WITH {UNIT_CTE_SQL},
+    scale_gate=_audit_gate("ann_ivf_sqrt_topk"),
+    oracle=_recall_sql(
+        f"""{UNIT_CTE_SQL},
 {_sqrt_km_ctes()},
-{_sqrt_search_ctes()},
-stop AS (
-  SELECT query_id, neighbor_id FROM kranked WHERE rank <= {_TOPK}
-),
-bscored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM bscored
-  ) WHERE rank <= {_TOPK}
-),
-hits AS (
-  SELECT b.query_id, count(s.neighbor_id) AS n_hits
-  FROM btop b LEFT JOIN stop s
-    ON s.query_id = b.query_id AND s.neighbor_id = b.neighbor_id
-  GROUP BY b.query_id
-)
-SELECT query_id,
-       {_TOPK} AS k,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
-FROM hits
-ORDER BY query_id
-""",
+{_sqrt_search_ctes()}""",
+        {None: "kranked"},
+    ),
 )
 def ann_ivf_sqrt_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@{_TOPK} of the sqrt-scaled IVF tier against
@@ -2342,40 +2305,10 @@ def ann_ivf_sqrt_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, probe, search AND the accuracy claim are all replayed by
     the oracle, so the recall numbers SCALE.md reports for this tier
     are the kind of number the driver hash-checks, not a local-test
-    aside. Both rankings are deterministic (rounded-cos + id
-    tie-breaks), so the overlap is too.
+    aside.
 
-    Scale shape: the brute side runs on operators/topk.py (partial
-    top-k, corpus streams once, shared query-cache with the other
-    recall report); the IVF side is ann_ivf_sqrt_topk's own kernels;
-    the comparison joins two queries x k row sets — negligible."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    btop = brute_topk(u, q, k=_TOPK, cache_key=f"annq|{sf_dir}").select(
-        "query_id", "neighbor_id"
-    )
-    stop = ann_ivf_sqrt_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        btop.alias("b")
-        .join(
-            stop.alias("s"),
-            (F.col("s.query_id") == F.col("b.query_id"))
-            & (F.col("s.neighbor_id") == F.col("b.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(F.count(F.col("s.neighbor_id")).alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(_TOPK).alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
-    ).orderBy("query_id")
+    Scale shape: the IVF side is ann_ivf_sqrt_topk's own kernels."""
+    return _recall_report(spark, sf_dir, ann_ivf_sqrt_topk)
 
 
 def _sqrt_pq_ctes(src: str = "embeddings", pre: str = "") -> str:
@@ -2454,9 +2387,7 @@ pscored AS (
   JOIN recon r ON r.cluster = p.label AND r.vec_id <> q.query_id
 ),
 pranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY adc DESC, neighbor_id
-  ) AS rank FROM pscored
+  {_rank_sql('adc')} FROM pscored
 )"""
 
 
@@ -2590,17 +2521,11 @@ def _sqrt_pq_scan(
         ).alias("ue"),
     )
 
-    qsrc = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % 100 == 0)
-        .select("vec_id", "embedding")
-    )
-    if rotate:
-        qsrc = _opq_rotate(qsrc)
-    q = qsrc.select(
-        F.col("vec_id").alias("query_id"),
+    q = _queries(
+        load_table(spark, sf_dir, "embeddings"),
         F.col("embedding").cast("array<double>").alias("qemb"),
         F.col("embedding").cast("array<double>").alias("qe"),
+        rotate=rotate,
     )
     probed = ivf_probe_cells(q, centroids, _sqrt_nprobe(k))
     return ivf_scan_topk(u, probed, topk)
@@ -2608,40 +2533,8 @@ def _sqrt_pq_scan(
 
 @register(
     "ann_ivf_sqrt_pq_recall_report",
-    # the ground-truth side is brute-force BY DESIGN (audit artifact)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_ivf_sqrt_pq_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
-    ),
-    oracle=f"""
-WITH {_sqrt_pq_ctes()},
-stop AS (
-  SELECT query_id, neighbor_id FROM pranked WHERE rank <= {_TOPK}
-),
-bscored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM bscored
-  ) WHERE rank <= {_TOPK}
-),
-hits AS (
-  SELECT b.query_id, count(s.neighbor_id) AS n_hits
-  FROM btop b LEFT JOIN stop s
-    ON s.query_id = b.query_id AND s.neighbor_id = b.neighbor_id
-  GROUP BY b.query_id
-)
-SELECT query_id,
-       {_TOPK} AS k,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
-FROM hits
-ORDER BY query_id
-""",
+    scale_gate=_audit_gate("ann_ivf_sqrt_pq_topk"),
+    oracle=_recall_sql(_sqrt_pq_ctes(), {None: "pranked"}),
 )
 def ann_ivf_sqrt_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@{_TOPK} of the IndexIVFPQ composition
@@ -2654,36 +2547,8 @@ def ann_ivf_sqrt_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame
     trainings, encode, decode, probe, ADC rank) AND the brute ground
     truth AND the overlap count in one statement.
 
-    Scale shape: brute side on operators/topk.py partial top-k
-    (corpus streams once, shared query cache); PQ side is the tier's
-    own kernels; the comparison joins two queries x k row sets."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    btop = brute_topk(u, q, k=_TOPK, cache_key=f"annq|{sf_dir}").select(
-        "query_id", "neighbor_id"
-    )
-    stop = ann_ivf_sqrt_pq_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        btop.alias("b")
-        .join(
-            stop.alias("s"),
-            (F.col("s.query_id") == F.col("b.query_id"))
-            & (F.col("s.neighbor_id") == F.col("b.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(F.count(F.col("s.neighbor_id")).alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(_TOPK).alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
-    ).orderBy("query_id")
+    Scale shape: the PQ side is the tier's own kernels."""
+    return _recall_report(spark, sf_dir, ann_ivf_sqrt_pq_topk)
 
 
 # Two-stage PQ search (VERDICT r06 item 4): ADC over codes is the fast
@@ -2714,9 +2579,7 @@ rscored AS (
   JOIN unit u ON u.vec_id = s.neighbor_id
 ),
 rranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-  ) AS rank FROM rscored
+  {_rank_sql('cos')} FROM rscored
 )"""
 
 
@@ -2776,51 +2639,17 @@ def ann_ivf_sqrt_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot("qe", "ne"), 4).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rank_neighbors(scored, _TOPK).orderBy("query_id", "rank")
 
 
 @register(
     "ann_ivf_sqrt_pq_rerank_recall_report",
-    # the ground-truth side is brute-force BY DESIGN (audit artifact)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_ivf_sqrt_pq_rerank_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
+    scale_gate=_audit_gate("ann_ivf_sqrt_pq_rerank_topk"),
+    oracle=_recall_sql(
+        f"""{_sqrt_pq_ctes()},
+{_sqrt_pq_rerank_ctes()}""",
+        {None: "rranked"},
     ),
-    oracle=f"""
-WITH {_sqrt_pq_ctes()},
-{_sqrt_pq_rerank_ctes()},
-stop AS (
-  SELECT query_id, neighbor_id FROM rranked WHERE rank <= {_TOPK}
-),
-bscored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM bscored
-  ) WHERE rank <= {_TOPK}
-),
-hits AS (
-  SELECT b.query_id, count(s.neighbor_id) AS n_hits
-  FROM btop b LEFT JOIN stop s
-    ON s.query_id = b.query_id AND s.neighbor_id = b.neighbor_id
-  GROUP BY b.query_id
-)
-SELECT query_id,
-       {_TOPK} AS k,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
-FROM hits
-ORDER BY query_id
-""",
 )
 def ann_ivf_sqrt_pq_rerank_recall_report(
     spark: SparkSession, sf_dir: str
@@ -2830,35 +2659,7 @@ def ann_ivf_sqrt_pq_rerank_recall_report(
     that shows the refine step actually buys recall back from the
     8-byte ADC floor (same registered-artifact pattern as
     ann_ivf_sqrt_pq_recall_report, so the driver hash-checks it)."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    btop = brute_topk(u, q, k=_TOPK, cache_key=f"annq|{sf_dir}").select(
-        "query_id", "neighbor_id"
-    )
-    stop = ann_ivf_sqrt_pq_rerank_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        btop.alias("b")
-        .join(
-            stop.alias("s"),
-            (F.col("s.query_id") == F.col("b.query_id"))
-            & (F.col("s.neighbor_id") == F.col("b.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(F.count(F.col("s.neighbor_id")).alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(_TOPK).alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
-    ).orderBy("query_id")
+    return _recall_report(spark, sf_dir, ann_ivf_sqrt_pq_rerank_topk)
 
 
 @register(
@@ -2903,40 +2704,10 @@ def ann_ivf_sqrt_opq_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_sqrt_opq_pq_recall_report",
-    # the ground-truth side is brute-force BY DESIGN (audit artifact)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_ivf_sqrt_opq_pq_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
+    scale_gate=_audit_gate("ann_ivf_sqrt_opq_pq_topk"),
+    oracle=_recall_sql(
+        _sqrt_pq_ctes(src="rotemb", pre=_opq_rot_cte()), {None: "pranked"}
     ),
-    oracle=f"""
-WITH {_sqrt_pq_ctes(src="rotemb", pre=_opq_rot_cte())},
-stop AS (
-  SELECT query_id, neighbor_id FROM pranked WHERE rank <= {_TOPK}
-),
-bscored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM bscored
-  ) WHERE rank <= {_TOPK}
-),
-hits AS (
-  SELECT b.query_id, count(s.neighbor_id) AS n_hits
-  FROM btop b LEFT JOIN stop s
-    ON s.query_id = b.query_id AND s.neighbor_id = b.neighbor_id
-  GROUP BY b.query_id
-)
-SELECT query_id,
-       {_TOPK} AS k,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
-FROM hits
-ORDER BY query_id
-""",
 )
 def ann_ivf_sqrt_opq_pq_recall_report(
     spark: SparkSession, sf_dir: str
@@ -2945,39 +2716,11 @@ def ann_ivf_sqrt_opq_pq_recall_report(
     exact brute force IN THE ROTATED SPACE (rotation is an isometry,
     so true neighbor sets are preserved and rotated ground truth IS
     ground truth) — the registered artifact behind the SCALE.md
-    rotation-vs-rerank table, same wrapper as
-    ann_ivf_sqrt_pq_recall_report (one shared recall-join code path).
-    The oracle replays rotation, the entire index build, the rotated
-    brute side and the overlap count in one statement."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False, rotate=True)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    btop = brute_topk(u, q, k=_TOPK, cache_key=f"annqrot|{sf_dir}").select(
-        "query_id", "neighbor_id"
-    )
-    stop = ann_ivf_sqrt_opq_pq_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        btop.alias("b")
-        .join(
-            stop.alias("s"),
-            (F.col("s.query_id") == F.col("b.query_id"))
-            & (F.col("s.neighbor_id") == F.col("b.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(F.count(F.col("s.neighbor_id")).alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(_TOPK).alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
-    ).orderBy("query_id")
+    rotation-vs-rerank table, on the same recall code path as
+    ann_ivf_sqrt_pq_recall_report. The oracle replays rotation, the
+    entire index build, the rotated brute side and the overlap count
+    in one statement."""
+    return _recall_report(spark, sf_dir, ann_ivf_sqrt_opq_pq_topk, rotate=True)
 
 
 # Matryoshka / dimension-truncation recall ladder (Kusupati et al.,
@@ -3004,59 +2747,51 @@ tu{dp} AS (
   FROM _tn{dp}
 ),
 tq{dp} AS (
-  SELECT vec_id AS query_id, ue AS qe FROM tu{dp} WHERE vec_id % 100 = 0
+  SELECT vec_id AS query_id, ue AS qe FROM tu{dp} WHERE {_SAMPLE_SQL}
 ),
 tscored{dp} AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
          round({dot_sql('q.qe', 'c.ue', dp)}, 4) AS cos
   FROM tq{dp} q JOIN tu{dp} c ON c.vec_id <> q.query_id
 ),
-ttop{dp} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM tscored{dp}
-  ) WHERE rank <= {_TOPK}
-),
-hits{dp} AS (
-  SELECT b.query_id, count(s.neighbor_id) AS n_hits
-  FROM btop b LEFT JOIN ttop{dp} s
-    ON s.query_id = b.query_id AND s.neighbor_id = b.neighbor_id
-  GROUP BY b.query_id
+tranked{dp} AS (
+  {_rank_sql('cos')} FROM tscored{dp}
 )"""
+
+
+def _ladder_sql(head: str, src: str = "embeddings") -> str:
+    """Oracle of a truncation ladder (SQL twin of _truncation_ladder):
+    ``head`` defines ``unit``; each d' rung ranks the re-normalized
+    d'-prefix of ``src``."""
+    rungs = ",".join(_mrl_trunc_ctes(dp, src) for dp in _MRL_DIMS)
+    return _recall_sql(
+        f"{head},\n{_Q_SQL},\n{rungs}", {dp: f"tranked{dp}" for dp in _MRL_DIMS}
+    )
+
+
+def _truncation_ladder(
+    truth: DataFrame, corpus: DataFrame, key: str, sf_dir: str
+) -> DataFrame:
+    """(trunc_dim, query_id, k, n_hits, recall): for each d' in
+    {_MRL_DIMS}, recall@{_TOPK} of exact search over the first d' dims
+    of ``corpus`` (re-normalized over those dims: slice -> norm -> unit,
+    the two-projection pattern) against the full-dim ``truth``. Each
+    rung is one brute pass on operators/topk.py whose query shards are
+    cached under ``key`` + d' and ``sf_dir``."""
+    rungs = []
+    for dp in _MRL_DIMS:
+        t = corpus.select("vec_id", F.slice("embedding", 1, dp).alias("te"))
+        tn = t.select("vec_id", "te", norm_column("te").alias("nrm"))
+        tu = tn.select("vec_id", unit_from("te", "nrm").alias("ue"))
+        top = _exact_topk(tu, f"{key}{dp}|{sf_dir}")
+        rungs.append(_recall_at_k(truth, top).select(F.lit(dp).alias("trunc_dim"), "*"))
+    return reduce(DataFrame.unionByName, rungs).orderBy("trunc_dim", "query_id")
 
 
 @register(
     "ann_matryoshka_recall_report",
-    # the ground-truth side is brute-force BY DESIGN (audit artifact)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_ivf_sqrt_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
-    ),
-    oracle=f"""
-WITH {UNIT_CTE_SQL},
-q AS (
-  SELECT vec_id AS query_id, ue AS qe FROM unit WHERE vec_id % 100 = 0
-),
-bscored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM bscored
-  ) WHERE rank <= {_TOPK}
-),
-{",".join(_mrl_trunc_ctes(dp) for dp in _MRL_DIMS)}
-{" UNION ALL ".join(
-    f'''SELECT {dp} AS trunc_dim, query_id, {_TOPK} AS k,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
-FROM hits{dp}''' for dp in _MRL_DIMS)}
-ORDER BY trunc_dim, query_id
-""",
+    scale_gate=_audit_gate("ann_ivf_sqrt_topk"),
+    oracle=_ladder_sql(UNIT_CTE_SQL),
 )
 def ann_matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style DIMENSION-TRUNCATION recall ladder (Kusupati et
@@ -3069,62 +2804,12 @@ def ann_matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     full width; the report quantifies exactly what that prefilter
     costs in recall on THIS corpus, and the driver hash-checks it.
 
-    Both rankings are deterministic (rounded-cos + id tie-breaks);
-    truncated vectors are re-normalized over their own d' dims in both
-    engines (slice -> norm -> unit, the two-projection pattern).
-
-    Scale shape: three brute passes (full, 32-d, 16-d) on
-    operators/topk.py — partial top-k per partition, corpus streams
-    once per pass and the truncated passes stream d'/{_DIM} of the
-    bytes; the overlap joins are queries x k rows. Exact baselines
-    are quadratic BY DESIGN (this is a ground-truth artifact, like
-    ann_brute_topk)."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    btop = brute_topk(u, q, k=_TOPK, cache_key=f"annq|{sf_dir}").select(
-        "query_id", "neighbor_id"
-    )
-
+    Scale shape: three brute passes (full, 32-d, 16-d); the truncated
+    passes stream d'/{_DIM} of the bytes. Exact baselines are quadratic
+    BY DESIGN (this is a ground-truth artifact, like ann_brute_topk)."""
+    truth = _ground_truth(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    reports = []
-    for dp in _MRL_DIMS:
-        t = e.select("vec_id", F.slice("embedding", 1, dp).alias("te"))
-        tn = t.select("vec_id", "te", norm_column("te").alias("nrm"))
-        tu = tn.select("vec_id", unit_from("te", "nrm").alias("ue"))
-        tq = tu.filter(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-        )
-        ttop = brute_topk(
-            tu, tq, k=_TOPK, cache_key=f"annq{dp}|{sf_dir}"
-        ).select("query_id", "neighbor_id")
-        hits = (
-            btop.alias("b")
-            .join(
-                ttop.alias("s"),
-                (F.col("s.query_id") == F.col("b.query_id"))
-                & (F.col("s.neighbor_id") == F.col("b.neighbor_id")),
-                "left",
-            )
-            .groupBy(F.col("b.query_id").alias("query_id"))
-            .agg(F.count(F.col("s.neighbor_id")).alias("n_hits"))
-        )
-        reports.append(
-            hits.select(
-                F.lit(dp).alias("trunc_dim"),
-                "query_id",
-                F.lit(_TOPK).alias("k"),
-                F.col("n_hits").cast("long").alias("n_hits"),
-                F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("trunc_dim", "query_id")
+    return _truncation_ladder(truth, e, "annq", sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -3234,8 +2919,6 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     table drops in — the margin join is k-bounded either way:
     |X|*{_BM_K} candidate rows, two integer aggregates, one broadcast-
     sized join back)."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
     langs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     u = _unit_table(spark, sf_dir, cache=False)
     ul = u.join(langs, u.vec_id == langs.doc_id).select("vec_id", "lang", "ue")
@@ -3308,35 +2991,8 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_srht_recall_report",
-    # the ground-truth side is brute-force BY DESIGN (audit artifact)
-    scale_gate=ScaleGate(
-        table="embeddings", max_rows=250_000, wide_twin="ann_ivf_sqrt_topk", advice="Recall/ground-truth audits at scale run on a SAMPLED stratum (the brute side is the cost, and recall estimates need only a sample)."
-    ),
-    oracle=f"""
-WITH {_opq_rot_cte()} {UNIT_CTE_SQL},
-q AS (
-  SELECT vec_id AS query_id, ue AS qe FROM unit WHERE vec_id % 100 = 0
-),
-bscored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round({dot_sql('q.qe', 'c.ue', _DIM)}, 4) AS cos
-  FROM q JOIN unit c ON c.vec_id <> q.query_id
-),
-btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-    ) AS rank FROM bscored
-  ) WHERE rank <= {_TOPK}
-),
-{",".join(_mrl_trunc_ctes(dp, src="rotemb") for dp in _MRL_DIMS)}
-{" UNION ALL ".join(
-    f'''SELECT {dp} AS trunc_dim, query_id, {_TOPK} AS k,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       round(n_hits * 1.0 / {_TOPK}, 4) AS recall
-FROM hits{dp}''' for dp in _MRL_DIMS)}
-ORDER BY trunc_dim, query_id
-""",
+    scale_gate=_audit_gate("ann_ivf_sqrt_topk"),
+    oracle=_ladder_sql(f"{_opq_rot_cte()} {UNIT_CTE_SQL}", src="rotemb"),
 )
 def ann_srht_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRHT recall ladder: per-query recall@{_TOPK} of exact cosine
@@ -3354,64 +3010,19 @@ def ann_srht_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Comparing this report against ann_matryoshka_recall_report row for
     row measures which regime the corpus is in.
 
-    Scale shape: identical to the Matryoshka report (three brute
-    passes via operators/topk.py, queries x k overlap joins) plus one
-    map-only rotation projection; the rotation is O(d^2) per vector
-    here (64x64 — trivial) and O(d log d) with the butterfly at
-    production dims. Ground truth runs on the UNROTATED corpus — the
-    rotation is an isometry, so full-dim rankings agree and the
-    cheaper scan wins."""
-    from http_log_anonymizer_spark.operators.topk import brute_topk
-
-    u = _unit_table(spark, sf_dir, cache=False)
-    q = u.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-    )
-    btop = brute_topk(u, q, k=_TOPK, cache_key=f"annq|{sf_dir}").select(
-        "query_id", "neighbor_id"
-    )
-
+    Scale shape: identical to the Matryoshka report plus one map-only
+    rotation projection; the rotation is O(d^2) per vector here (64x64
+    — trivial) and O(d log d) with the butterfly at production dims.
+    Ground truth runs on the UNROTATED corpus — the rotation is an
+    isometry, so full-dim rankings agree and the cheaper scan wins."""
+    truth = _ground_truth(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # pinned (r10, guide §2.4): unpinned, every truncation rung re-ran
     # the rotation for BOTH its corpus scan and its query-shard pass
     # (4 re-derivations for the 2-dim ladder); the table is gate-bounded
     # (<= 250k rows), exactly the _sqrt_pq_scan pinning rationale.
     rot = pin(_opq_rotate(e))
-    reports = []
-    for dp in _MRL_DIMS:
-        t = rot.select("vec_id", F.slice("embedding", 1, dp).alias("te"))
-        tn = t.select("vec_id", "te", norm_column("te").alias("nrm"))
-        tu = tn.select("vec_id", unit_from("te", "nrm").alias("ue"))
-        tq = tu.filter(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("ue").alias("qe")
-        )
-        ttop = brute_topk(
-            tu, tq, k=_TOPK, cache_key=f"srht{dp}|{sf_dir}"
-        ).select("query_id", "neighbor_id")
-        hits = (
-            btop.alias("b")
-            .join(
-                ttop.alias("s"),
-                (F.col("s.query_id") == F.col("b.query_id"))
-                & (F.col("s.neighbor_id") == F.col("b.neighbor_id")),
-                "left",
-            )
-            .groupBy(F.col("b.query_id").alias("query_id"))
-            .agg(F.count(F.col("s.neighbor_id")).alias("n_hits"))
-        )
-        reports.append(
-            hits.select(
-                F.lit(dp).alias("trunc_dim"),
-                "query_id",
-                F.lit(_TOPK).alias("k"),
-                F.col("n_hits").cast("long").alias("n_hits"),
-                F.round(F.col("n_hits") * 1.0 / _TOPK, 4).alias("recall"),
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("trunc_dim", "query_id")
+    return _truncation_ladder(truth, rot, "srht", sf_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -36,20 +36,6 @@ HTTP_LOG_SCHEMA = StructType(
     ]
 )
 
-# Wire field order of the capnp message (http_log.capnp:4-12); used by the
-# decoder (sources/capnp.py) and the positional JSON row encoder.
-WIRE_FIELDS = [
-    "timestampEpochMilli",
-    "resourceId",
-    "bytesSent",
-    "requestTimeMilli",
-    "responseStatus",
-    "cacheStatus",
-    "method",
-    "remoteAddr",
-    "url",
-]
-
 # ClickHouse dedup/sort key (anonymizer/src/http_log.rs:107); also the key
 # for ReplacingMergeTree eventual dedup (lib.rs:99-125).
 SORT_KEY = ["resource_id", "response_status", "remote_addr", "timestamp"]
@@ -85,14 +71,3 @@ def clickhouse_table_ddl(table: str = "http_log") -> str:
 def clickhouse_insert_ddl(table: str = "http_log") -> str:
     """INSERT header for JSONCompactEachRow (anonymizer/src/sink.rs:318)."""
     return f"INSERT INTO {table} ({', '.join(_CH_TYPES)})"
-
-
-def spark_create_table_ddl(table: str = "http_log", path: str | None = None) -> str:
-    """Pure-Spark equivalent table for self-contained tests: parquet table
-    partitioned monthly; dedup on SORT_KEY replaces ReplacingMergeTree."""
-    cols = ",\n  ".join(f"{f.name} {f.dataType.simpleString().upper()}" for f in HTTP_LOG_SCHEMA)
-    loc = f"\nLOCATION '{path}'" if path else ""
-    return (
-        f"CREATE TABLE IF NOT EXISTS {table} (\n  {cols},\n  month STRING\n)\n"
-        f"USING parquet\nPARTITIONED BY (month){loc}"
-    )

@@ -59,7 +59,7 @@ def get_spark(
       fact tables at any scale factor, and broadcasting them removes
       full shuffles from every join in the registry.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         env = os.environ.get("SPARK_SHUFFLE_PARTITIONS")

@@ -1,4 +1,4 @@
 from http_log_anonymizer_spark.sinks.parquet import ParquetSink
-from http_log_anonymizer_spark.sinks.clickhouse import ClickHouseSink, encode_compact_json_rows
+from http_log_anonymizer_spark.sinks.clickhouse import ClickHouseSink
 
-__all__ = ["ParquetSink", "ClickHouseSink", "encode_compact_json_rows"]
+__all__ = ["ParquetSink", "ClickHouseSink"]

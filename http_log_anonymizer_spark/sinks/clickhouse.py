@@ -7,7 +7,7 @@ Reference behavior (anonymizer/src/sink.rs):
   400-418; DDL text http_log.rs:91-111)           -> ``ensure_table``
 - rows encoded as JSONCompactEachRow positional arrays with the
   timestamp truncated to unix seconds (http_log.rs:71-86, sink.rs:318)
-                                                   -> ``encode_compact_json_rows``
+                                                   -> ``encode_compact_json_row``
 - one block per request, rate-limited (sink.rs:303-331)
                                                    -> one request per PARTITION,
                                                       per-endpoint token bucket with the
@@ -22,9 +22,10 @@ Inserts run EXECUTOR-SIDE (mapInPandas over the batch, one HTTP POST
 per partition): the driver never materializes the batch, so throughput
 scales with executors instead of hitting a driver OOM/network wall at
 100 TB. The reference's single-connection pacing generalizes as a rate
-share: each partition's bucket uses ``interval x n_partitions`` so the
-aggregate request rate stays at the configured ceiling; within a
-partition, row order (and therefore block order) is preserved.
+share: each partition waits ``interval x n_partitions`` (this batch's
+count) after its endpoint's last request, so the aggregate request rate
+stays at the configured ceiling; within a partition, row order (and
+therefore block order) is preserved.
 
 No ClickHouse server or client library exists in this container, so the
 HTTP insert is import/connection-gated; encoding, DDL and pacing logic
@@ -34,7 +35,6 @@ insert function with a recording poster).
 
 from __future__ import annotations
 
-import io
 import json
 import urllib.request
 from collections.abc import Iterator
@@ -42,7 +42,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from http_log_anonymizer_spark.config import ClickHouseConfig
 from http_log_anonymizer_spark.schema import (
@@ -50,9 +50,6 @@ from http_log_anonymizer_spark.schema import (
     clickhouse_insert_ddl,
     clickhouse_table_ddl,
 )
-from http_log_anonymizer_spark.streaming.limiter import RequestLimiter
-
-_JSON_ROW_SCHEMA = StructType([StructField("json", StringType())])
 
 
 def encode_compact_json_row(row: dict) -> str:
@@ -78,20 +75,6 @@ def encode_compact_json_row(row: dict) -> str:
     )
 
 
-def encode_compact_json_rows(df: DataFrame) -> DataFrame:
-    """Distributed row encoding via Arrow-batched mapInPandas — the
-    CompactJsonRow stage (sink.rs:62, 285) without collecting to the
-    driver."""
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"json": [encode_compact_json_row(r) for r in pdf.to_dict("records")]}
-            )
-
-    return df.mapInPandas(enc, _JSON_ROW_SCHEMA)
-
-
 def _http_post(url: str, user: str, query: str, body: str) -> None:  # pragma: no cover
     """One HTTP request (sink.rs:40-41's single-connection client:
     urllib opens/closes per call, serializing requests per caller)."""
@@ -113,8 +96,11 @@ def partition_insert_fn(
     partition's rows as JSONCompactEachRow and POST them as ONE block,
     paced by the per-endpoint token bucket (interval pre-scaled by the
     caller to the batch's partition count so the aggregate rate matches
-    the reference's single-connection ceiling). Yields a 1-row stats
-    frame so the driver can assert delivery without touching the data."""
+    the reference's single-connection ceiling). The wait uses THIS
+    batch's interval: a reused Python worker keeps the endpoint's
+    last-request time across batches, not the interval of the first
+    batch it served. Yields a 1-row stats frame so the driver can assert
+    delivery without touching the data."""
 
     def insert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import time as _time
@@ -154,15 +140,7 @@ class ClickHouseSink:
     """
 
     def __init__(self, cfg: ClickHouseConfig | None = None) -> None:
-        from http_log_anonymizer_spark.streaming.limiter import shared_limiter
-
         self.cfg = cfg or ClickHouseConfig.from_env()
-        # shared per endpoint: several streaming queries writing to the
-        # same ClickHouse must share one token bucket (the nginx proxy
-        # rate-limits per upstream, not per query)
-        self.limiter = shared_limiter(
-            self.cfg.url, self.cfg.rate_limit_s or self.cfg.default_rate_limit_s
-        )
         self._table_ready = False
         self.last_batch_stats: tuple[int, int] | None = None  # (rows, requests)
 

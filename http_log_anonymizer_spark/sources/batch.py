@@ -171,9 +171,3 @@ def load_table(
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all tables as temp views for spark.sql() use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

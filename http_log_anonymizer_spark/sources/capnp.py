@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from http_log_anonymizer_spark.schema import HTTP_LOG_SCHEMA, WIRE_FIELDS
+from http_log_anonymizer_spark.schema import HTTP_LOG_SCHEMA
 from http_log_anonymizer_spark.sources.capnp_codec import decode_http_log_record
 
 _COLUMNS = [f.name for f in HTTP_LOG_SCHEMA.fields]
@@ -63,4 +63,4 @@ def decode_capnp_stream(df: DataFrame, value_col: str = "value") -> DataFrame:
     return df.mapInPandas(decode_batches, HTTP_LOG_SCHEMA)
 
 
-__all__ = ["decode_capnp_stream", "WIRE_FIELDS"]
+__all__ = ["decode_capnp_stream"]

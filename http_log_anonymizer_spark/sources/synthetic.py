@@ -3,11 +3,8 @@ reference's Java producer container (docker/http-log-kafka-producer,
 docker-compose.yml:133-142: one capnp record every
 KAFKA_PRODUCER_DELAY_MS).
 
-Batch and streaming variants generate the same deterministic rows from
-a row index, so tests can compare a drained stream against the batch
-table. The streaming variant uses the rate source (rowsPerSecond ==
-1000/KAFKA_PRODUCER_DELAY_MS) with every field derived from the rate
-source's ``value`` counter — fully JVM-side, no Python row generation.
+Every field is derived from a row index — deterministic and fully
+JVM-side, no Python row generation.
 """
 
 from __future__ import annotations
@@ -55,17 +52,3 @@ def _derive(value: F.Column) -> list[F.Column]:
 def synthetic_http_log_batch(spark: SparkSession, n_rows: int = 10_000) -> DataFrame:
     """Deterministic batch http_log table of ``n_rows`` rows."""
     return spark.range(n_rows).select(*_derive(F.col("id")))
-
-
-def synthetic_http_log_stream(
-    spark: SparkSession, rows_per_second: int = 10, ramp_up: int = 0
-) -> DataFrame:
-    """Streaming variant on the rate source. Default 10 rows/s matches
-    the reference producer's KAFKA_PRODUCER_DELAY_MS=100 (.envrc:17)."""
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .option("rampUpTime", f"{ramp_up}s")
-        .load()
-    )
-    return rate.select(*_derive(F.col("value")))

@@ -48,11 +48,13 @@ class RequestLimiter:
 
 
 # ---------------------------------------------------------------------------
-# Shared limiters (SURVEY §7 hard part 4): multiple streaming queries
-# writing to ONE rate-limited endpoint must share a token bucket — the
-# per-query trigger cadence can't coordinate across queries. Writers run
-# in foreachBatch on the driver, so a process-global registry suffices
-# (executors never call the limiter).
+# Shared limiters (SURVEY §7 hard part 4): requests to ONE rate-limited
+# endpoint must share a token bucket — the per-query trigger cadence
+# can't coordinate them. The ClickHouse sink calls it EXECUTOR-side, in
+# each Python worker (sinks/clickhouse.py:partition_insert_fn), so the
+# registry is per process: it carries an endpoint's last-request time
+# across the batches a reused worker serves, and each batch brings its
+# own interval (scaled by that batch's partition count).
 # ---------------------------------------------------------------------------
 
 import threading
@@ -62,12 +64,13 @@ _SHARED_LOCK = threading.Lock()
 
 
 def shared_limiter(name: str, rate_s: float, clock=time.monotonic) -> RequestLimiter:
-    """Process-wide limiter keyed by endpoint name. All sinks pointing
-    at the same endpoint get the SAME bucket; the first caller fixes the
-    rate (mirrors one nginx zone per upstream, ch-proxy/nginx.conf:13)."""
+    """Process-wide limiter keyed by endpoint name. All callers pointing
+    at the same endpoint get the SAME bucket, i.e. one last-request time
+    (mirrors one nginx zone per upstream, ch-proxy/nginx.conf:13); each
+    call sets the window to its own ``rate_s``, so a caller whose share
+    of the endpoint changed is paced at its current share."""
+    fresh = RequestLimiter(rate_s, clock=clock)  # validates rate_s
     with _SHARED_LOCK:
-        lim = _SHARED.get(name)
-        if lim is None:
-            lim = RequestLimiter(rate_s, clock=clock)
-            _SHARED[name] = lim
+        lim = _SHARED.setdefault(name, fresh)
+        lim._rate = fresh._rate
         return lim

@@ -126,6 +126,41 @@ def test_partition_insert_posts_one_block_per_partition():
     assert empty_stats[0].iloc[0].to_dict() == {"rows_inserted": 0, "requests": 0}
 
 
+def test_partition_insert_paces_at_the_current_batch_interval():
+    """A reused Python worker keeps its endpoint's last-request time
+    across batches, but each batch's interval is scaled by THAT batch's
+    partition count: a wider batch after a narrower one must wait its
+    own, longer interval — not the first batch's."""
+    import time
+    import uuid
+
+    import pandas as pd
+
+    from http_log_anonymizer_spark.sinks.clickhouse import partition_insert_fn
+
+    url = f"http://ch-pacing-{uuid.uuid4().hex}:8123"
+    sent = []
+
+    def fake_post(url, user, query, body):
+        sent.append(time.monotonic())
+
+    pdf = pd.DataFrame(
+        [
+            {
+                "timestamp": pd.Timestamp("2024-01-01 00:00:07", tz="UTC"),
+                "resource_id": 1, "bytes_sent": 2, "request_time_milli": 3,
+                "response_status": 200, "cache_status": "HIT", "method": "GET",
+                "remote_addr": "1.2.3.x", "url": "/r/1",
+            }
+        ]
+    )
+    for interval in (0.001, 0.5):
+        fn = partition_insert_fn(url, "default", "INSERT", interval, post=fake_post)
+        list(fn(iter([pdf])))
+    assert len(sent) == 2
+    assert sent[1] - sent[0] >= 0.5
+
+
 # ---------------------------------------------------------------------------
 # End-to-end streaming pipeline over a file source
 # ---------------------------------------------------------------------------
