@@ -3054,6 +3054,162 @@ def ams_f2_selfjoin_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# The part co-purchase graph shared by the graph queries below: two
+# parts are linked when they appear in the same order. Every graph
+# decision is written once here, each with its DuckDB twin: the
+# lineitem self-equi-join on l_orderkey (bounded per-order fan-out, no
+# cartesian risk), the support threshold, the directed and undirected
+# edge builds, the degree table, the symmetric arcs and the
+# degree-ordered triangle listing. The edge builders do not pin: the
+# PageRank rounds need an unpinned edge subtree so that every round
+# reuses its shuffle, and the other callers pin their edges. The SQL
+# twins are AS MATERIALIZED because DuckDB inlines a plain CTE at
+# every reference.
+# ---------------------------------------------------------------------------
+
+# Support threshold: raw co-occurrence graphs are dominated by
+# weight-1 noise edges (see triangle_counts), so an edge needs at least
+# this many co-occurring lineitem pairs.
+_COPURCHASE_MINSUP = 2
+
+_COPURCHASE_PAIRS_SQL = """FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey"""
+
+# both orientations of every undirected edge
+_COPURCHASE_ARCS_SQL = """arcs AS MATERIALIZED (
+  SELECT u AS src, v AS dst FROM und UNION ALL SELECT v, u FROM und
+)"""
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_partkey, dst, ...) for every ordered pair of lineitems of one
+    order that hold different parts."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    other = li.select(
+        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("dst")
+    )
+    return li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.dst))
+
+
+def _copurchase_edges(
+    spark: SparkSession, sf_dir: str, minsup: int = _COPURCHASE_MINSUP
+) -> DataFrame:
+    """Directed weighted edges (src, dst, w), w = co-occurring lineitem
+    pairs, kept at w >= ``minsup`` (1: every edge, no filter)."""
+    edges = (
+        _copurchase_pairs(spark, sf_dir)
+        .groupBy(F.col("l_partkey").alias("src"), "dst")
+        .agg(F.count("*").alias("w"))
+    )
+    return edges.filter(F.col("w") >= minsup) if minsup > 1 else edges
+
+
+def _copurchase_edges_sql(minsup: int = _COPURCHASE_MINSUP) -> str:
+    having = f"\n  HAVING count(*) >= {minsup}" if minsup > 1 else ""
+    return f"""edges AS MATERIALIZED (
+  SELECT a.l_partkey AS src, b.l_partkey AS dst, count(*) AS w
+  {_COPURCHASE_PAIRS_SQL}
+  GROUP BY a.l_partkey, b.l_partkey{having}
+)"""
+
+
+def _copurchase_und(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Undirected edges (u, v), u < v, at the support threshold. Both
+    orientations of a pair are grouped together, so the floor doubles;
+    the edge set equals the directed one's."""
+    return (
+        _copurchase_pairs(spark, sf_dir)
+        .groupBy(
+            F.least("l_partkey", "dst").alias("u"),
+            F.greatest("l_partkey", "dst").alias("v"),
+        )
+        .agg(F.count("*").alias("w2"))
+        .filter(F.col("w2") >= 2 * _COPURCHASE_MINSUP)
+        .select("u", "v")
+    )
+
+
+def _copurchase_und_sql(sfx: int | str = "") -> str:
+    return f"""und{sfx} AS MATERIALIZED (
+  SELECT least(a.l_partkey, b.l_partkey) AS u,
+         greatest(a.l_partkey, b.l_partkey) AS v
+  {_COPURCHASE_PAIRS_SQL}
+  GROUP BY u, v
+  HAVING count(*) >= {2 * _COPURCHASE_MINSUP}
+)"""
+
+
+def _copurchase_arcs(und: DataFrame) -> DataFrame:
+    """Both orientations (src, dst) of every undirected edge."""
+    return und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
+        und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, d): the degree of every node of undirected edges (u, v)."""
+    return (
+        und.select(F.col("u").alias("node"))
+        .unionByName(und.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+    )
+
+
+def _degrees_sql(sfx: int | str = "") -> str:
+    return f"""deg{sfx} AS MATERIALIZED (
+  SELECT node, count(*) AS d FROM (
+    SELECT u AS node FROM und{sfx} UNION ALL SELECT v AS node FROM und{sfx}
+  ) GROUP BY node
+)"""
+
+
+def _triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """(x, y, z), once per triangle of undirected edges (u, v) with
+    degrees ``deg`` (node, d). Every edge points from its (degree,
+    id)-smaller endpoint, so wedges open only at each triangle's
+    lowest-degree vertex: a hub of degree D adds O(D) oriented edges
+    but almost no wedges (Suri & Vassilvitskii, WWW 2011). Three
+    integer equi-joins; the oriented table is pinned because the wedge
+    join and the closing join read it three times."""
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    smaller_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    fwd = pin(
+        und.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(smaller_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(smaller_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+        )
+    )
+    w1 = fwd.select(F.col("s"), F.col("t").alias("y"))
+    w2 = fwd.select(F.col("s"), F.col("t").alias("z"))
+    closing = fwd.select(F.col("s").alias("y"), F.col("t").alias("z"))
+    return (
+        w1.join(w2, "s")
+        .filter(F.col("y") < F.col("z"))
+        .join(closing, ["y", "z"])
+        .select(F.col("s").alias("x"), "y", "z")
+    )
+
+
+def _triangles_sql(sfx: int | str = "") -> str:
+    return f"""fwd{sfx} AS MATERIALIZED (
+  SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS s,
+         CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS t
+  FROM und{sfx} e JOIN deg{sfx} du ON e.u = du.node JOIN deg{sfx} dv ON e.v = dv.node
+),
+tri{sfx} AS MATERIALIZED (
+  SELECT w1.s AS x, w1.t AS y, w2.t AS z
+  FROM fwd{sfx} w1 JOIN fwd{sfx} w2 ON w1.s = w2.s AND w1.t < w2.t
+  JOIN fwd{sfx} e ON e.s = w1.t AND e.t = w2.t
+)"""
+
+
+# ---------------------------------------------------------------------------
 # Fixed-point PageRank (Page et al., 1999) over the part co-purchase
 # graph — the graph-analytics companion to the connected-components
 # operator (operators/components.py). All arithmetic is SCALED INTEGER
@@ -3071,13 +3227,8 @@ _PR_TOP = 25
 def _pagerank_oracle() -> str:
     base = int(0.15 * _PR_SCALE)
     parts = [
-        f"""edges AS (
-  SELECT a.l_partkey AS src, b.l_partkey AS dst, count(*) AS w
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM lineitem),
+        _copurchase_edges_sql(minsup=1),
+        f"""nodes AS (SELECT DISTINCT l_partkey AS node FROM lineitem),
 outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY src),
 r0 AS (SELECT node, CAST({_PR_SCALE} AS BIGINT) AS r FROM nodes)"""
     ]
@@ -3130,21 +3281,17 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge shuffle via ReusedExchange (no memory pinning).
     Dangling nodes (no out-edges) keep base rank and leak their surplus
     — the classic simplification, identical in both engines."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("dst")
-    )
     # No explicit materialization: the edge subtree repeats once per
     # iteration, and Spark serves every repeat from the SAME shuffle
-    # files via ReusedExchange (plan-asserted) — disk-backed and
-    # per-executor on a cluster; exchange reuse costs nothing and is
-    # memory-oblivious.
-    edges = (
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.dst))
-        .groupBy(F.col("l_partkey").alias("src"), "dst")
-        .agg(F.count("*").alias("w"))
+    # files via ReusedExchange (plan-asserted in
+    # tests/test_plan_shapes.py) — disk-backed and per-executor on a
+    # cluster; exchange reuse costs nothing and is memory-oblivious.
+    edges = _copurchase_edges(spark, sf_dir, minsup=1)
+    nodes = (
+        _t(spark, sf_dir, "lineitem")
+        .select(F.col("l_partkey").alias("node"))
+        .distinct()
     )
-    nodes = li.select(F.col("l_partkey").alias("node")).distinct()
     outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
     base = int(0.15 * _PR_SCALE)
     ranks = nodes.select("node", F.lit(_PR_SCALE).cast("long").alias("r"))
@@ -3187,13 +3334,8 @@ _PPR_TOP = 10
 def _ppr_oracle() -> str:
     base = int(0.15 * _PR_SCALE)
     parts = [
-        f"""edges AS (
-  SELECT a.l_partkey AS src, b.l_partkey AS dst, count(*) AS w
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-),
-outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY src),
+        _copurchase_edges_sql(minsup=1),
+        f"""outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY src),
 seeds AS (
   SELECT node FROM (
     SELECT src AS node, count(*) AS dg FROM edges GROUP BY src
@@ -3254,15 +3396,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the sparse state. Overflow: per-seed total mass is bounded by
     SCALE / 0.15, so the flow numerator stays < 2^63 with the same
     headroom argument as pagerank_copurchase."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("dst")
-    )
-    edges = (
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.dst))
-        .groupBy(F.col("l_partkey").alias("src"), "dst")
-        .agg(F.count("*").alias("w"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, minsup=1)
     outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
     # seed pick is a distributed TakeOrderedAndProject (orderBy+limit),
     # NOT an unpartitioned row_number window — a global window would
@@ -3467,37 +3601,13 @@ def hits_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _TRI_TOP = 20
-_TRI_MINSUP = 2  # co-purchase support threshold (see docstring)
 
 
 def _triangles_oracle() -> str:
     return f"""
-WITH und AS (
-  SELECT least(a.l_partkey, b.l_partkey) AS u,
-         greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY u, v
-  HAVING count(*) >= {2 * _TRI_MINSUP}
-),
-deg AS (
-  SELECT node, count(*) AS d FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
-  ) GROUP BY node
-),
-fwd AS (
-  -- orient every edge from the (degree, id)-smaller endpoint: wedge
-  -- generation then happens at the LOWEST-degree vertex of each
-  -- triangle, the bound that makes the join survive skewed graphs
-  SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS s,
-         CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS t
-  FROM und e JOIN deg du ON e.u = du.node JOIN deg dv ON e.v = dv.node
-),
-tri AS (
-  SELECT w1.s AS x, w1.t AS y, w2.t AS z
-  FROM fwd w1 JOIN fwd w2 ON w1.s = w2.s AND w1.t < w2.t
-  JOIN fwd e ON e.s = w1.t AND e.t = w2.t
-),
+WITH {_copurchase_und_sql()},
+{_degrees_sql()},
+{_triangles_sql()},
 per_node AS (
   SELECT node, count(*) AS n_triangles FROM (
     SELECT x AS node FROM tri UNION ALL
@@ -3515,7 +3625,7 @@ ORDER BY p.n_triangles DESC, p.node LIMIT {_TRI_TOP}
 @register("triangle_counts", oracle=_triangles_oracle())
 def triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_TRI_TOP} parts by triangle participation in the
-    co-purchase graph (edges kept only at support >= {_TRI_MINSUP}
+    co-purchase graph (edges kept only at support >= {_COPURCHASE_MINSUP}
     co-occurrences), with degree and local clustering coefficient —
     the standard cohesion report over a similarity/co-occurrence
     graph.
@@ -3535,46 +3645,9 @@ def triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the triangle triple never materializes wider than 3 ints.
     Deterministic integer logic, so the driver hash-checks the full
     report."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = pin(
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
-        .groupBy(
-            F.least("l_partkey", "p2").alias("u"),
-            F.greatest("l_partkey", "p2").alias("v"),
-        )
-        .agg(F.count("*").alias("w2"))
-        .filter(F.col("w2") >= 2 * _TRI_MINSUP)
-        .select("u", "v")
-    )
-    deg = pin(
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    smaller_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    fwd = pin(
-        und.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(smaller_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(smaller_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-    )
-    w1 = fwd.select(F.col("s"), F.col("t").alias("y"))
-    w2 = fwd.select(F.col("s"), F.col("t").alias("z"))
-    closing = fwd.select(F.col("s").alias("y"), F.col("t").alias("z"))
-    tri = (
-        w1.join(w2, "s")
-        .filter(F.col("y") < F.col("z"))
-        .join(closing, ["y", "z"])
-        .select(F.col("s").alias("x"), "y", "z")
-    )
+    und = pin(_copurchase_und(spark, sf_dir))
+    deg = pin(_degrees(und))
+    tri = _triangles(und, deg)
     per_node = (
         tri.select(F.col("x").alias("node"))
         .unionByName(tri.select(F.col("y").alias("node")))
@@ -3612,7 +3685,6 @@ def triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HB_REGS = 16  # HLL registers per node (m): demo width, alpha_16 = 0.673
 _HB_ROUNDS = 3  # ball radius swept: t = 0..3
-_HB_MINSUP = 2  # same support threshold discipline as triangle_counts
 _HB_RANKBITS = 40  # rank drawn from [0, 2^40): rank = 41 - bitlength
 # alpha_16 * m^2 * 2^41 * 1000 milli-units, as ONE exact integer:
 # 673 * 256 * 2^41 (673 = round(0.673 * 1000)); fits BIGINT (3.8e17).
@@ -3655,21 +3727,7 @@ def _hb_round_states(spark, sf_dir):
     hyperball_neighborhood_report and harmonic_centrality_topk."""
     from http_log_anonymizer_spark.functions.text import hash64
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = pin(
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
-        .groupBy(
-            F.least("l_partkey", "p2").alias("u"),
-            F.greatest("l_partkey", "p2").alias("v"),
-        )
-        .agg(F.count("*").alias("w2"))
-        .filter(F.col("w2") >= 2 * _HB_MINSUP)
-        .select("u", "v")
-    )
-    edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    edges = _copurchase_arcs(pin(_copurchase_und(spark, sf_dir)))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     u_draw = hash64("node", "hbrank") % (1 << _HB_RANKBITS)
     # h0: the draw materializes as a named column first (the rank CASE
@@ -3712,25 +3770,19 @@ def _hb_node_est(state: DataFrame) -> DataFrame:
     )
 
 
-def _hyperball_oracle() -> str:
+def _hyperball_oracle_ctes() -> str:
+    """The register pipeline h0..hT and the per-node estimates e0..eT
+    that hyperball_neighborhood_report and harmonic_centrality_topk
+    read (the SQL twin of _hb_round_states + _hb_node_est)."""
     from http_log_anonymizer_spark.functions.text import hash64_sql
 
     reg = f"({hash64_sql('node', 'hbreg')} % {_HB_REGS})"
     u = f"({hash64_sql('node', 'hbrank')} % {1 << _HB_RANKBITS})"
     rank = f"CASE WHEN {u} = 0 THEN 41 ELSE 41 - length(bin({u})) END"
     parts = [
-        f"""und AS (
-  SELECT least(a.l_partkey, b.l_partkey) AS u,
-         greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY u, v
-  HAVING count(*) >= {2 * _HB_MINSUP}
-),
-edges AS (SELECT u AS src, v AS dst FROM und
-          UNION ALL SELECT v, u FROM und),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-nv AS (SELECT count(*) AS n_nodes FROM nodes),
+        _copurchase_und_sql(),
+        _COPURCHASE_ARCS_SQL,
+        f"""nodes AS (SELECT DISTINCT src AS node FROM arcs),
 h0 AS (SELECT node, CAST({reg} AS BIGINT) AS reg,
               CAST({rank} AS BIGINT) AS rank FROM nodes)"""
     ]
@@ -3739,7 +3791,7 @@ h0 AS (SELECT node, CAST({reg} AS BIGINT) AS reg,
             f"""h{t} AS (
   SELECT node, reg, CAST(max(rank) AS BIGINT) AS rank FROM (
     SELECT e.dst AS node, h.reg, h.rank
-    FROM edges e JOIN h{t - 1} h ON h.node = e.src
+    FROM arcs e JOIN h{t - 1} h ON h.node = e.src
     UNION ALL
     SELECT node, reg, rank FROM h{t - 1}
   ) GROUP BY node, reg
@@ -3748,23 +3800,26 @@ h0 AS (SELECT node, CAST({reg} AS BIGINT) AS reg,
     est = _hb_est_sql("//")
     for t in range(_HB_ROUNDS + 1):
         parts.append(
-            f"""nf{t} AS (
-  SELECT {t} AS t, CAST(sum(est) AS BIGINT) AS nf_est_milli FROM (
-    SELECT CAST({est} AS BIGINT) AS est FROM (
-      SELECT node, count(*) AS cnt,
-             sum(CAST(1 AS BIGINT) << (41 - rank)) AS sp
-      FROM h{t} GROUP BY node
-    )
+            f"""e{t} AS (
+  SELECT node, CAST({est} AS BIGINT) AS est FROM (
+    SELECT node, count(*) AS cnt,
+           sum(CAST(1 AS BIGINT) << (41 - rank)) AS sp
+    FROM h{t} GROUP BY node
   )
 )"""
         )
+    return "WITH " + ",\n".join(parts)
+
+
+def _hyperball_oracle() -> str:
     union = "\nUNION ALL\n".join(
-        f"SELECT t, nf_est_milli FROM nf{t}" for t in range(_HB_ROUNDS + 1)
+        f"SELECT {t} AS t, CAST(sum(est) AS BIGINT) AS nf_est_milli FROM e{t}"
+        for t in range(_HB_ROUNDS + 1)
     )
     return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
+        _hyperball_oracle_ctes()
+        + f""",
+nv AS (SELECT count(*) AS n_nodes FROM nodes)
 SELECT CAST(t AS BIGINT) AS t, n_nodes, nf_est_milli,
        CAST(nf_est_milli // n_nodes AS BIGINT) AS avg_ball_milli
 FROM ({union}) CROSS JOIN nv
@@ -3834,20 +3889,6 @@ _HB_TOP = 20
 
 
 def _harmonic_oracle() -> str:
-    base = _hyperball_oracle().split("\nSELECT CAST(t AS BIGINT)")[0]
-    est = _hb_est_sql("//")
-    parts = [base]
-    for t in range(_HB_ROUNDS + 1):
-        parts.append(
-            f""",
-e{t} AS (
-  SELECT node, CAST({est} AS BIGINT) AS est FROM (
-    SELECT node, count(*) AS cnt,
-           sum(CAST(1 AS BIGINT) << (41 - rank)) AS sp
-    FROM h{t} GROUP BY node
-  )
-)"""
-        )
     terms = " + ".join(
         f"((greatest(e{t}.est - e{t - 1}.est, 0) * 1000) // {t})"
         for t in range(1, _HB_ROUNDS + 1)
@@ -3856,7 +3897,7 @@ e{t} AS (
         f"JOIN e{t} ON e{t}.node = e0.node" for t in range(1, _HB_ROUNDS + 1)
     )
     return (
-        "".join(parts)
+        _hyperball_oracle_ctes()
         + f"""
 SELECT node, harmonic_micro,
        CAST(row_number() OVER (ORDER BY harmonic_micro DESC, node) AS BIGINT)
@@ -4206,20 +4247,13 @@ def hdr_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _LPA_ROUNDS = 4
-_LPA_MINSUP = 2  # drop weight-1 noise edges (the triangle_counts lesson)
 _LPA_TOP = 25
 
 
 def _lpa_oracle_ctes() -> str:
     parts = [
-        f"""edges AS (
-  SELECT a.l_partkey AS src, b.l_partkey AS dst, count(*) AS w
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= {_LPA_MINSUP}
-),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
+        _copurchase_edges_sql(),
+        """nodes AS (SELECT DISTINCT src AS node FROM edges),
 inertia AS (SELECT dst AS node, max(w) AS iw FROM edges GROUP BY dst),
 l0 AS (SELECT node, node AS lbl FROM nodes)"""
     ]
@@ -4257,9 +4291,7 @@ LIMIT {_LPA_TOP}"""
 def _lpa_pipeline(spark: SparkSession, sf_dir: str, pin_labels: bool = False):
     """(weighted symmetric edge table, final label table) of the LPA
     rounds — factored so community_modularity_report can score the
-    SAME partition the community query reports. Pure extraction: the
-    construction is byte-identical to what label_propagation_communities
-    inlined before, so its plan and oracle are unchanged.
+    SAME partition the community query reports.
 
     The thresholded edge table is pinned (r10 A/B, both run orders:
     LPA sf10 unpinned 137.4/74.3 s vs pinned 65.9/53.7 s, modularity
@@ -4270,16 +4302,7 @@ def _lpa_pipeline(spark: SparkSession, sf_dir: str, pin_labels: bool = False):
     node-sized label table — for the modularity consumer, whose two
     scoring joins would otherwise re-derive all rounds twice; the
     community query's single consumer doesn't need it."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("dst")
-    )
-    edges = pin(
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.dst))
-        .groupBy(F.col("l_partkey").alias("src"), "dst")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _LPA_MINSUP)
-    )
+    edges = pin(_copurchase_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     inertia = edges.groupBy(F.col("dst").alias("node")).agg(F.max("w").alias("iw"))
     labels = nodes.select("node", F.col("node").alias("lbl"))
@@ -4324,7 +4347,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     variant hash-verifies end to end.
 
     Scale shape: the edge table comes from one self-equi-join on
-    l_orderkey, support-thresholded (>= {_LPA_MINSUP}) exactly like
+    l_orderkey, support-thresholded (>= {_COPURCHASE_MINSUP}) exactly like
     triangle_counts — weight-1 noise edges dominate raw co-occurrence
     graphs and contribute nothing to community structure. Each round is
     one equi-join of labels onto edge sources (the thresholded edge
@@ -4355,19 +4378,12 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 
 _KCORE_K = 3
 _KCORE_ROUNDS = 4
-_KCORE_MINSUP = 2  # same noise-edge threshold as LPA/triangles
 
 
 def _kcore_oracle() -> str:
     parts = [
-        f"""edges AS (
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= {_KCORE_MINSUP}
-),
-a0 AS (SELECT DISTINCT src AS node FROM edges)"""
+        _copurchase_edges_sql(),
+        "a0 AS (SELECT DISTINCT src AS node FROM edges)",
     ]
     for t in range(_KCORE_ROUNDS):
         parts.append(
@@ -4404,16 +4420,12 @@ def kcore_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     web-graph curation pipelines.
 
     Scale shape: each round is two semi-join-shaped equi-joins of the
-    edge table against the survivor set (the edge exchange is reused
-    across rounds — the pagerank lesson) and one groupBy(dst) degree
+    edge table against the survivor set (the edge table is pinned once
+    and scanned by every round, see below) and one groupBy(dst) degree
     count with map-side combine. Survivor state is |V| rows,
     distributed; per-round output is one aggregated row. Symmetric
     edges mean the directed count halves to undirected n_edges
     exactly."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("dst")
-    )
     # Edges pinned once and the survivor set pinned per round — the
     # ktruss loop-carried-state rule (r10): each round's alive table is
     # consumed THREE times (the degree join, the round's report row,
@@ -4425,13 +4437,7 @@ def kcore_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw co-occurrence pairs) plus node-sized survivor tables —
     # contrast community_modularity_report, whose fan-out is WITHIN
     # one job and measured the opposite trade (see its docstring).
-    edges = pin(
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.dst))
-        .groupBy(F.col("l_partkey").alias("src"), "dst")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINSUP)
-        .select("src", "dst")
-    )
+    edges = pin(_copurchase_edges(spark, sf_dir).select("src", "dst"))
     alive = edges.select(F.col("src").alias("node")).distinct()
     rounds = []
     for t in range(_KCORE_ROUNDS):
@@ -6473,27 +6479,17 @@ def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _LP_TOP = 25
-_LP_MINSUP = 2  # same co-purchase support contract as triangle_counts
 _LP_MAXDEG = 64  # hub cap for wedge centers (contract, both engines)
 _LP_SCALE = 1_000_000_000  # score unit: parts-per-billion of 1/deg
 
 
 def _link_pred_oracle() -> str:
     return f"""
-WITH und AS (
-  SELECT least(a.l_partkey, b.l_partkey) AS u,
-         greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY u, v
-  HAVING count(*) >= {2 * _LP_MINSUP}
-),
-adj AS (
-  SELECT u AS z, v AS x FROM und UNION ALL SELECT v AS z, u AS x FROM und
-),
-deg AS (SELECT z AS node, count(*) AS d FROM adj GROUP BY z),
+WITH {_copurchase_und_sql()},
+{_COPURCHASE_ARCS_SQL},
+{_degrees_sql()},
 centers AS (
-  SELECT a.z, a.x, d.d FROM adj a JOIN deg d ON a.z = d.node
+  SELECT a.src AS z, a.dst AS x, d.d FROM arcs a JOIN deg d ON a.src = d.node
   WHERE d.d <= {_LP_MAXDEG}
 ),
 wedge AS (
@@ -6523,7 +6519,7 @@ def link_prediction_ra(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines on positive operands).
 
     Scale shape, three rules. (1) SUPPORT THRESHOLDING first — the
-    same >= {_LP_MINSUP} co-purchase contract as triangle_counts cuts
+    same >= {_COPURCHASE_MINSUP} co-purchase contract as triangle_counts cuts
     the weight-1 noise edges that dominate raw co-occurrence graphs.
     (2) HUB CAP on wedge centers: a center of degree D emits D^2
     wedges, so one celebrity part can dwarf the rest of the job; RA's
@@ -6536,26 +6532,13 @@ def link_prediction_ra(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins on integer keys; the candidate never carries more than
     four ints; top-k is TakeOrderedAndProject. Deterministic integer
     scores, so the driver hash-checks the report."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = pin(
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
-        .groupBy(
-            F.least("l_partkey", "p2").alias("u"),
-            F.greatest("l_partkey", "p2").alias("v"),
-        )
-        .agg(F.count("*").alias("w2"))
-        .filter(F.col("w2") >= 2 * _LP_MINSUP)
-        .select("u", "v")
-    )
-    adj = und.select(F.col("u").alias("z"), F.col("v").alias("x")).unionByName(
-        und.select(F.col("v").alias("z"), F.col("u").alias("x"))
-    )
-    deg = adj.groupBy(F.col("z").alias("node")).agg(F.count("*").alias("d"))
+    und = pin(_copurchase_und(spark, sf_dir))
+    arcs = _copurchase_arcs(und)
+    deg = _degrees(und)
     centers = pin(
-        adj.join(deg, adj.z == deg.node)
+        arcs.join(deg, arcs.src == deg.node)
         .filter(F.col("d") <= _LP_MAXDEG)
-        .select("z", "x", "d")
+        .select(F.col("src").alias("z"), F.col("dst").alias("x"), "d")
     )
     a = centers.select("z", F.col("x").alias("u"), "d")
     b = centers.select(F.col("z").alias("z2"), F.col("x").alias("v"))
@@ -7195,19 +7178,8 @@ def attribution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _assortativity_oracle() -> str:
     return f"""
-WITH und AS (
-  SELECT least(a.l_partkey, b.l_partkey) AS u,
-         greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY u, v
-  HAVING count(*) >= {2 * _LP_MINSUP}
-),
-deg AS (
-  SELECT node, count(*) AS d FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
-  ) GROUP BY node
-),
+WITH {_copurchase_und_sql()},
+{_degrees_sql()},
 sums AS (
   SELECT CAST(count(*) AS HUGEINT) AS m,
          CAST(sum(du.d * dv.d) AS HUGEINT) AS s1,
@@ -7231,7 +7203,7 @@ FROM sums
 @register("graph_assortativity_report", oracle=_assortativity_oracle())
 def graph_assortativity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman degree assortativity of the support-thresholded
-    co-purchase graph (same >= {_LP_MINSUP} edge contract as
+    co-purchase graph (same >= {_COPURCHASE_MINSUP} edge contract as
     triangle_counts / link_prediction_ra): one row with the exact
     integer edge sums S1/S2/S3 and the Pearson coefficient
     (4*M*S1 - S2^2) / (2*M*S3 - S2^2) as the only floating-point
@@ -7245,24 +7217,8 @@ def graph_assortativity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     five numbers ever leaves the executors. Products run in
     DECIMAL(38,0)/HUGEINT so a billion-edge graph with 1e3-degree
     hubs cannot overflow the intermediate."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    und = pin(
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
-        .groupBy(
-            F.least("l_partkey", "p2").alias("u"),
-            F.greatest("l_partkey", "p2").alias("v"),
-        )
-        .agg(F.count("*").alias("w2"))
-        .filter(F.col("w2") >= 2 * _LP_MINSUP)
-        .select("u", "v")
-    )
-    deg = pin(
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    und = pin(_copurchase_und(spark, sf_dir))
+    deg = pin(_degrees(und))
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     sums = (
@@ -7755,31 +7711,17 @@ def theilsen_trend_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KTRUSS_K = 4  # each surviving edge needs >= 2 triangles
 _KTRUSS_ROUNDS = 3
-_KTRUSS_MINSUP = 2  # same noise-edge threshold as LPA/triangles/k-core
 
 
 def _ktruss_round_ctes(t: int) -> str:
-    """CTEs computing e{t+1} (surviving edges) from e{t}: degree-ordered
-    orientation, wedge join, per-edge triangle support, threshold."""
-    # AS MATERIALIZED is load-bearing: DuckDB INLINES plain CTEs at every
-    # reference, and each round references its predecessor ~5 times —
-    # 3 unrolled rounds would expand e0's lineitem self-join 100+
-    # times and exhaust the process fd limit before planning finishes.
-    return f"""deg{t} AS MATERIALIZED (
-  SELECT node, count(*) AS d FROM (
-    SELECT u AS node FROM e{t} UNION ALL SELECT v AS node FROM e{t}
-  ) GROUP BY node
-),
-fwd{t} AS MATERIALIZED (
-  SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS s,
-         CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS t
-  FROM e{t} e JOIN deg{t} du ON e.u = du.node JOIN deg{t} dv ON e.v = dv.node
-),
-tri{t} AS MATERIALIZED (
-  SELECT w1.s AS x, w1.t AS y, w2.t AS z
-  FROM fwd{t} w1 JOIN fwd{t} w2 ON w1.s = w2.s AND w1.t < w2.t
-  JOIN fwd{t} e ON e.s = w1.t AND e.t = w2.t
-),
+    """CTEs computing und{t+1} (surviving edges) from und{t}:
+    degree-ordered triangle listing, per-edge triangle support,
+    threshold. AS MATERIALIZED is load-bearing here: each round reads
+    its predecessor ~5 times, so 3 inlined rounds would expand the
+    lineitem self-join 100+ times and exhaust the process fd limit
+    before planning finishes."""
+    return f"""{_degrees_sql(t)},
+{_triangles_sql(t)},
 supp{t} AS MATERIALIZED (
   SELECT u, v, count(*) AS ntri FROM (
     SELECT least(x, y) AS u, greatest(x, y) AS v FROM tri{t}
@@ -7789,30 +7731,21 @@ supp{t} AS MATERIALIZED (
     SELECT least(y, z) AS u, greatest(y, z) AS v FROM tri{t}
   ) GROUP BY u, v
 ),
-e{t + 1} AS MATERIALIZED (
-  SELECT e.u, e.v FROM e{t} e
+und{t + 1} AS MATERIALIZED (
+  SELECT e.u, e.v FROM und{t} e
   JOIN supp{t} s ON s.u = e.u AND s.v = e.v
   WHERE s.ntri >= {_KTRUSS_K - 2}
 )"""
 
 
 def _ktruss_oracle() -> str:
-    parts = [
-        f"""e0 AS MATERIALIZED (
-  SELECT least(a.l_partkey, b.l_partkey) AS u,
-         greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  GROUP BY u, v
-  HAVING count(*) >= {2 * _KTRUSS_MINSUP}
-)"""
-    ]
+    parts = [_copurchase_und_sql(0)]
     for t in range(_KTRUSS_ROUNDS):
         parts.append(_ktruss_round_ctes(t))
     rounds_sql = "\nUNION ALL\n".join(
         f"""SELECT {t} AS round,
-       (SELECT count(*) FROM e{t}) AS n_edges,
-       (SELECT count(*) FROM (SELECT u AS n FROM e{t} UNION SELECT v FROM e{t})) AS n_nodes"""
+       (SELECT count(*) FROM und{t}) AS n_edges,
+       (SELECT count(*) FROM (SELECT u AS n FROM und{t} UNION SELECT v FROM und{t})) AS n_nodes"""
         for t in range(_KTRUSS_ROUNDS + 1)
     )
     return (
@@ -7838,58 +7771,20 @@ def ktruss_peeling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly replayable upper bound on the true truss, the per-round
     deltas showing convergence.
 
-    Scale shape: every round is the triangle_counts machinery — the
-    degree-ordered orientation bounds wedge generation at each
-    triangle's lowest-degree vertex (Suri-Vassilvitskii), the triangle
-    triple explodes to exactly three integer edge rows, support is a
+    Scale shape: every round is the triangle_counts machinery
+    (_triangles) — the degree-ordered orientation bounds wedge
+    generation at each triangle's lowest-degree vertex
+    (Suri-Vassilvitskii), the triangle triple explodes to exactly three integer edge rows, support is a
     map-side-combined groupBy on (u, v), and the threshold join prunes
     the edge set before the next round ever builds a wedge. Edge state
     shrinks monotonically; each round's output is pinned so
     round t+1 starts from materialized survivors instead of replaying
     rounds 0..t (the loop-carried-state rule — contrast the modularity
     negative result, where the fan-out was WITHIN one job)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    other = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = pin(
-        li.join(other, (li.l_orderkey == other.o2) & (li.l_partkey != other.p2))
-        .groupBy(
-            F.least("l_partkey", "p2").alias("u"),
-            F.greatest("l_partkey", "p2").alias("v"),
-        )
-        .agg(F.count("*").alias("w2"))
-        .filter(F.col("w2") >= 2 * _KTRUSS_MINSUP)
-        .select("u", "v")
-    )
+    edges = pin(_copurchase_und(spark, sf_dir))
 
     def survivors(e: DataFrame) -> DataFrame:
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionByName(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
-        du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-        dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-        smaller = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        fwd = pin(
-            e.join(du, "u")
-            .join(dv, "v")
-            .select(
-                F.when(smaller, F.col("u")).otherwise(F.col("v")).alias("s"),
-                F.when(smaller, F.col("v")).otherwise(F.col("u")).alias("t"),
-            )
-        )
-        w1 = fwd.select("s", F.col("t").alias("y"))
-        w2 = fwd.select("s", F.col("t").alias("z"))
-        closing = fwd.select(F.col("s").alias("y"), F.col("t").alias("z"))
-        tri = (
-            w1.join(w2, "s")
-            .filter(F.col("y") < F.col("z"))
-            .join(closing, ["y", "z"])
-            .select(F.col("s").alias("x"), "y", "z")
-        )
+        tri = _triangles(e, _degrees(e))
         supp = (
             tri.select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
             .unionByName(

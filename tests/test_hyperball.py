@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from http_log_anonymizer_spark.plans import REGISTRY
 from http_log_anonymizer_spark.plans.analytics import (
+    _COPURCHASE_MINSUP as _HB_MINSUP,
     _HB_LC_MILLI,
-    _HB_MINSUP,
     _HB_REGS,
     _HB_ROUNDS,
 )

@@ -11,8 +11,8 @@ import pytest
 
 from http_log_anonymizer_spark.plans import REGISTRY
 from http_log_anonymizer_spark.plans.analytics import (
+    _COPURCHASE_MINSUP as _LP_MINSUP,
     _LP_MAXDEG,
-    _LP_MINSUP,
     _LP_SCALE,
 )
 from tests.conftest import SF_SMOKE

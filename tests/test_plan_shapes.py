@@ -6,7 +6,7 @@ global sort, JVM-only text path)."""
 from __future__ import annotations
 
 from http_log_anonymizer_spark.plans import REGISTRY
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _plan(spark, name: str) -> str:
@@ -240,6 +240,20 @@ def test_pagerank_edges_are_equi_join(spark):
     plan = _plan(spark, "pagerank_copurchase")
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "TakeOrderedAndProject" in plan
+
+
+def test_pagerank_rounds_reuse_the_edge_shuffle(spark):
+    """plans/analytics.py:pagerank_copurchase and personalized_pagerank
+    leave their edge table unpinned because every power-iteration round
+    reads the SAME edge shuffle through ReusedExchange. AQE settles the
+    reuse only while it runs, so the final adaptive plan is read after
+    collect()."""
+    for name in ("pagerank_copurchase", "personalized_pagerank"):
+        df = REGISTRY[name].spark_fn(spark, SF_SMOKE)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ReusedExchange" in plan, name
+        assert "/pin-" not in plan, f"{name} scans a pinned table"
 
 
 def test_triangle_counts_avoids_nested_loops(spark):

@@ -3,8 +3,10 @@
 Usage: python tools/capture_plans.py <suffix> [query ...]
 
 Writes plans/r10/<query>_<suffix>.txt for each named query (default: the
-bench headline + ext set). Plan capture never executes the query, so it
-is safe to run co-tenant with other Spark work.
+bench headline + ext set). Capture does not run a query's final job,
+but it does run every ``pin()`` the query makes: a pin writes its
+scratch parquet while the DataFrame is built, so capturing a pinned
+query runs Spark jobs over the sf dir.
 """
 
 from __future__ import annotations
