@@ -24,8 +24,11 @@ Two implementations:
   leading-zero octets rejected, RFC 5952 compression on output).
 
 At 100 TB: the pandas UDF sees the full row count but receives NULL for
-every v4 row (the common case), so Arrow batches are near-empty work;
-the v4 path never leaves the JVM.
+every v4 row (the common case); the v4 path never leaves the JVM. The
+UDF's stage still has a fixed cost per task (worker hand-off, Arrow
+round trip, task set-up; see ``_daemon.py`` for the part that was
+measured and removed), which small micro-batches pay in full whatever
+their v4 share.
 """
 
 from __future__ import annotations

@@ -3460,41 +3460,44 @@ _HITS_SCALE = 1_000_000_000
 
 
 def _hits_oracle() -> str:
+    # AS MATERIALIZED: DuckDB inlines a plain CTE at every reference, and
+    # each normalize step reads its raw scores twice (values and max), so
+    # inlining doubles the work at every half-step
     s = _HITS_SCALE
     parts = [
-        """he AS (
+        """he AS MATERIALIZED (
   SELECT o_custkey AS c, l_partkey AS p, count(*) AS w
   FROM orders JOIN lineitem ON o_orderkey = l_orderkey
   GROUP BY c, p
 )""",
-        f"hub0 AS (SELECT DISTINCT c AS node, CAST({s} AS BIGINT) AS sc FROM he)",
+        f"hub0 AS MATERIALIZED (SELECT DISTINCT c AS node, CAST({s} AS BIGINT) AS sc FROM he)",
     ]
     for k in range(1, _HITS_ROUNDS + 1):
         parts.append(
-            f"""araw{k} AS (
+            f"""araw{k} AS MATERIALIZED (
   SELECT e.p AS node, sum(CAST(e.w AS HUGEINT) * h.sc) AS sc
   FROM he e JOIN hub{k - 1} h ON h.node = e.c GROUP BY e.p
 )"""
         )
         parts.append(
-            f"amax{k} AS (SELECT greatest(max(sc), 1) AS mx FROM araw{k})"
+            f"amax{k} AS MATERIALIZED (SELECT greatest(max(sc), 1) AS mx FROM araw{k})"
         )
         parts.append(
-            f"""auth{k} AS (
+            f"""auth{k} AS MATERIALIZED (
   SELECT node, CAST((sc * {s}) // mx AS BIGINT) AS sc FROM araw{k}, amax{k}
 )"""
         )
         parts.append(
-            f"""hraw{k} AS (
+            f"""hraw{k} AS MATERIALIZED (
   SELECT e.c AS node, sum(CAST(e.w AS HUGEINT) * a.sc) AS sc
   FROM he e JOIN auth{k} a ON a.node = e.p GROUP BY e.c
 )"""
         )
         parts.append(
-            f"hmax{k} AS (SELECT greatest(max(sc), 1) AS mx FROM hraw{k})"
+            f"hmax{k} AS MATERIALIZED (SELECT greatest(max(sc), 1) AS mx FROM hraw{k})"
         )
         parts.append(
-            f"""hub{k} AS (
+            f"""hub{k} AS MATERIALIZED (
   SELECT node, CAST((sc * {s}) // mx AS BIGINT) AS sc FROM hraw{k}, hmax{k}
 )"""
         )
