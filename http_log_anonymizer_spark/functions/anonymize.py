@@ -44,9 +44,13 @@ from pyspark.sql.types import StringType
 # Strict IPv4: four octets 0-255, no leading zeros (Rust's Ipv4Addr and
 # Python's ipaddress both reject leading zeros).
 _OCTET = r"(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9][0-9]|[0-9])"
-IPV4_REGEX = rf"^({_OCTET}\.){{3}}{_OCTET}$"
+# End of input: `$` also matches before a final line terminator, which
+# made "1.2.3.4\n" an IPv4. Not `\z`: IPV4_REGEX is also compiled by
+# Python's re, which has no `\z` before 3.14.
+_END = r"(?![\s\S])"
+IPV4_REGEX = rf"^({_OCTET}\.){{3}}{_OCTET}{_END}"
 # Replacement keeps the first three octets (group 1 spans them).
-_IPV4_REPLACE_PATTERN = rf"^(({_OCTET}\.){{3}}){_OCTET}$"
+_IPV4_REPLACE_PATTERN = rf"^(({_OCTET}\.){{3}}){_OCTET}{_END}"
 
 
 def anonymize_ip_py(value: str | None) -> str | None:

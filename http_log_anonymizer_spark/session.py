@@ -16,6 +16,10 @@ from pyspark.sql import SparkSession
 
 # the directory that holds this package, for the Python workers' path
 _PACKAGE_PARENT = str(Path(__file__).resolve().parents[1])
+# the fork-free local filesystem (jvm/ForkFreeLocalFs.java), built by
+# tools/build_localfs_jar.py; joined onto any classpath a caller passes
+_LOCALFS_JAR = str(Path(__file__).resolve().parent / "jvm" / "fork-free-localfs.jar")
+_CLASSPATH_CONFS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
 
 
 def shuffle_partitions_for_sf(sf: float) -> int:
@@ -134,11 +138,28 @@ def get_spark(
         # working directory.
         .config("spark.python.daemon.module", "http_log_anonymizer_spark._daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Without libhadoop (pip's pyspark ships none) Hadoop's local
+        # filesystem forks `chmod` for every file and directory it
+        # creates with a permission (checkpoint logs, parquet parts and
+        # their .crc files, _temporary, _SUCCESS) and `readlink` 4 times
+        # per FileContext rename. Measured with JFR over one ingest
+        # drain: 1,377 subprocesses, about 43 per micro-batch, at 3.6 ms
+        # each; 30 of them per batch are the stream thread's 3
+        # checkpoint log writes, which each took about 23 ms. The
+        # package jar (on the driver and executor classpaths, like the
+        # worker path above) does those two calls through java.nio and
+        # keeps Hadoop's own LocalFileSystem / LocalFs over them, so the
+        # .crc checksums and the no-overwrite checkpoint rename stay.
+        .config("spark.hadoop.fs.file.impl", "hla.localfs.ForkFreeLocalFs$Local")
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "hla.localfs.ForkFreeLocalFs$Fs")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/hla-spark-warehouse"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    for key in _CLASSPATH_CONFS:
+        conf[key] = os.pathsep.join(filter(None, (conf.get(key), _LOCALFS_JAR)))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -30,8 +30,12 @@ EDGE = [
     ("fe80::", "fe80:::xxxx"),
 ]
 
+# A trailing line terminator makes the value no IP (Rust's IpAddr parse,
+# Python's ipaddress and DuckDB agree); Java's `$` matches before it.
+LINE_END = [(f"1.2.3.4{end}", f"1.2.3.4{end}") for end in ("\n", "\r\n", "\u0085", "\u2028")]
 
-@pytest.mark.parametrize("value,expected", GOLDEN + EDGE)
+
+@pytest.mark.parametrize("value,expected", GOLDEN + EDGE + LINE_END)
 def test_anonymize_py(value, expected):
     assert anonymize_ip_py(value) == expected
 
@@ -41,18 +45,21 @@ def test_anonymize_py_none():
 
 
 def test_anonymize_column_full(spark):
-    rows = [(v,) for v, _ in GOLDEN + EDGE]
+    rows = [(v,) for v, _ in GOLDEN + EDGE + LINE_END]
     df = spark.createDataFrame(rows, ["addr"])
     got = [r[0] for r in df.select(anonymize_ip("addr")).collect()]
-    assert got == [e for _, e in GOLDEN + EDGE]
+    assert got == [e for _, e in GOLDEN + EDGE + LINE_END]
 
 
 def test_anonymize_column_fast_v4(spark):
     # fast path: exact on v4 + non-IP; v6 passes through un-canonicalized
     rows = [("1.2.3.4",), ("a.b.c.d",), ("256.1.1.1",), ("01.2.3.4",), ("10.0.0.255",)]
+    rows += [(v,) for v, _ in LINE_END]
     df = spark.createDataFrame(rows, ["addr"])
     got = [r[0] for r in df.select(anonymize_ip_fast("addr")).collect()]
-    assert got == ["1.2.3.x", "a.b.c.d", "256.1.1.1", "01.2.3.4", "10.0.0.x"]
+    assert got == ["1.2.3.x", "a.b.c.d", "256.1.1.1", "01.2.3.4", "10.0.0.x"] + [
+        e for _, e in LINE_END
+    ]
 
 
 def test_fast_path_stays_jvm_side(spark):
